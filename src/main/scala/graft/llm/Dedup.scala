@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Exact
 import graft.sources.Tables
 import TextAnalysis.{h60, h60Sql}
 
@@ -2265,7 +2266,7 @@ object Dedup {
   // v through the final assignment), then the correlated within-
   // cluster EXISTS probe.
   val ddSemanticSql: String =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
       |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 4),
       |s1 AS (SELECT e.vec_id, e.v, c.cid,
       |    list_dot_product(e.v, e.v) - 2.0 * list_dot_product(e.v, c.cv)
@@ -2276,7 +2277,7 @@ object Dedup {
       |ex AS (SELECT cid, unnest(list_transform(range(0, len(v)),
       |    i -> {'pos': i, 'val': v[i+1]}), recursive := true) FROM a1),
       |means AS (SELECT cid, pos,
-      |    CAST(SUM(CAST(val AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS m
+      |    ${Exact.sumSql("val")} / COUNT(*) AS m
       |  FROM ex GROUP BY 1, 2),
       |c1 AS (SELECT cid, list(m ORDER BY pos) AS cv FROM means GROUP BY cid),
       |s2 AS (SELECT e.vec_id, e.v, c.cid,
@@ -2595,11 +2596,11 @@ object Dedup {
        |  JOIN sigs sb ON c.doc_b = sb.doc_id
        |  LEFT JOIN tr ON c.doc_a = tr.doc_a AND c.doc_b = tr.doc_b),
        |a AS (SELECT COUNT(*) AS n_pairs,
-       |    CAST(SUM(CAST(err2 AS DECIMAL(28,12))) AS DOUBLE) AS s2,
+       |    ${Exact.sumSql("err2")} AS s2,
        |    MAX(err2) AS m2,
-       |    CAST(SUM(CAST(err4 AS DECIMAL(28,12))) AS DOUBLE) AS s4,
+       |    ${Exact.sumSql("err4")} AS s4,
        |    MAX(err4) AS m4,
-       |    CAST(SUM(CAST(err8 AS DECIMAL(28,12))) AS DOUBLE) AS s8,
+       |    ${Exact.sumSql("err8")} AS s8,
        |    MAX(err8) AS m8
        |  FROM p)
        |SELECT k, n_pairs, mean_abs_err, max_abs_err FROM (
@@ -2767,7 +2768,6 @@ object Dedup {
   // one plan against the cached pair table.
   def ddQualityProp(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
     val pairs = ngramPairsFor(spark, dir).filter($"jaccard" >= 0.5)
     val edges = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
       .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
@@ -2779,7 +2779,7 @@ object Dedup {
         .join(s.select($"doc_id".as("nb_id"), $"s".as("nb_s")),
           $"dst" === $"nb_id")
         .groupBy($"src".as("doc_id"))
-        .agg((sum($"nb_s".cast(DecimalType(18, 6))).cast("double")
+        .agg((Exact.sum($"nb_s", 6, 18)
           / count(lit(1))).as("nb"))
       s.join(nb, Seq("doc_id"), "left")
         .select($"doc_id",
@@ -2802,14 +2802,14 @@ object Dedup {
        |s0 AS (SELECT doc_id,
        |    ROUND(LEAST(n_chars / 1000.0, 1.0), 6) AS s FROM documents),
        |n1 AS (SELECT e.src AS doc_id,
-       |    CAST(SUM(CAST(s0.s AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS nb
+       |    ${Exact.sumSql("s0.s", 6, 18)} / COUNT(*) AS nb
        |  FROM edges e JOIN s0 ON s0.doc_id = e.dst GROUP BY e.src),
        |s1 AS (SELECT s0.doc_id,
        |    ROUND(CASE WHEN n1.nb IS NULL THEN s0.s
        |      ELSE s0.s * 0.5 + n1.nb * 0.5 END, 6) AS s
        |  FROM s0 LEFT JOIN n1 USING (doc_id)),
        |n2 AS (SELECT e.src AS doc_id,
-       |    CAST(SUM(CAST(s1.s AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS nb
+       |    ${Exact.sumSql("s1.s", 6, 18)} / COUNT(*) AS nb
        |  FROM edges e JOIN s1 ON s1.doc_id = e.dst GROUP BY e.src),
        |s2 AS (SELECT s1.doc_id,
        |    ROUND(CASE WHEN n2.nb IS NULL THEN s1.s
@@ -2835,7 +2835,6 @@ object Dedup {
   // (1.0/size is one IEEE division — identical in both engines).
   def ddSoftWeights(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
     val w = ddCluster(spark, dir)
       .select($"doc_id",
         round(lit(1.0) / $"cluster_size", 6).as("weight"))
@@ -2844,7 +2843,7 @@ object Dedup {
       .join(w, "doc_id")
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
-        sum($"weight".cast(DecimalType(18, 6))).cast("double")
+        Exact.sum($"weight", 6, 18)
           .as("eff_docs"))
       .select($"source", $"n_docs",
         round($"eff_docs", 6).as("eff_docs"),
@@ -2860,7 +2859,7 @@ object Dedup {
        |j AS (SELECT d.source, w.weight FROM documents d
        |  JOIN w USING (doc_id)),
        |ag AS (SELECT source, COUNT(*) AS n_docs,
-       |    CAST(SUM(CAST(weight AS DECIMAL(18,6))) AS DOUBLE) AS eff_docs
+       |    ${Exact.sumSql("weight", 6, 18)} AS eff_docs
        |  FROM j GROUP BY source)
        |SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
        |  ROUND(eff_docs, 6) AS eff_docs,
@@ -3038,9 +3037,9 @@ object Dedup {
       .crossJoin(tot)
       .groupBy($"status")
       .agg(count(lit(1)).as("n_docs"),
-        round(sum($"n_chars".cast("decimal(28,6)")).cast("double")
+        round(Exact.sum($"n_chars", 6)
           / count(lit(1)), 6).as("mean_chars"),
-        round(sum($"n_words".cast("decimal(28,6)")).cast("double")
+        round(Exact.sum($"n_words", 6)
           / count(lit(1)), 6).as("mean_words"),
         round(count(lit(1)).cast("double") / first($"n_total"), 6)
           .as("share"))
@@ -3060,9 +3059,9 @@ object Dedup {
        |    len(regexp_split_to_array(trim(text), '\\s+')) AS n_words
        |  FROM documents LEFT JOIN dd ON doc_id = dd.d)
        |SELECT status, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |  ROUND(CAST(SUM(CAST(n_chars AS DECIMAL(28,6))) AS DOUBLE)
+       |  ROUND(${Exact.sumSql("n_chars", 6)}
        |    / COUNT(*), 6) AS mean_chars,
-       |  ROUND(CAST(SUM(CAST(n_words AS DECIMAL(28,6))) AS DOUBLE)
+       |  ROUND(${Exact.sumSql("n_words", 6)}
        |    / COUNT(*), 6) AS mean_words,
        |  ROUND(CAST(COUNT(*) AS DOUBLE) / MIN(n_total), 6) AS share
        |FROM t CROSS JOIN tot GROUP BY status ORDER BY status""".stripMargin
@@ -3159,12 +3158,11 @@ object Dedup {
        |    est_jaccard, COALESCE(jaccard, 0.0) AS tj
        |  FROM est LEFT JOIN truth USING (doc_a, doc_b))
        |SELECT est_bin, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       |  ROUND(CAST(SUM(CAST(est_jaccard AS DECIMAL(28,12))) AS DOUBLE)
+       |  ROUND(${Exact.sumSql("est_jaccard")}
        |    / COUNT(*), 6) AS mean_est,
-       |  ROUND(CAST(SUM(CAST(tj AS DECIMAL(28,12))) AS DOUBLE)
+       |  ROUND(${Exact.sumSql("tj")}
        |    / COUNT(*), 6) AS mean_true,
-       |  ROUND(CAST(SUM(CAST(ABS(est_jaccard - tj) AS DECIMAL(28,12)))
-       |    AS DOUBLE) / COUNT(*), 6) AS mean_abs_err
+       |  ROUND(${Exact.sumSql("ABS(est_jaccard - tj)")} / COUNT(*), 6) AS mean_abs_err
        |FROM j GROUP BY est_bin ORDER BY est_bin""".stripMargin
 
   // --------------------------------------------------------------------
@@ -3335,14 +3333,12 @@ object Dedup {
       .agg(sum($"m".cast("decimal(38,0)")).as("s")).head().getDecimal(0)
     val nS = sameCnt +
       (if (crossDec == null) 0L else crossDec.longValueExact())
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val union = nM + nS - nBoth
     spark.createDataFrame(Seq((
       nM, nS, nBoth,
-      r6(if (union == 0L) 0.0 else nBoth.toDouble / union.toDouble),
-      r6(if (nM == 0L) 0.0 else nBoth.toDouble / nM.toDouble),
-      r6(if (nS == 0L) 0.0 else nBoth.toDouble / nS.toDouble))))
+      Exact.round(if (union == 0L) 0.0 else nBoth.toDouble / union.toDouble, 6),
+      Exact.round(if (nM == 0L) 0.0 else nBoth.toDouble / nM.toDouble, 6),
+      Exact.round(if (nS == 0L) 0.0 else nBoth.toDouble / nS.toDouble, 6))))
       .toDF("n_minhash", "n_simhash", "n_both", "jaccard",
         "containment_minhash", "containment_simhash")
   }

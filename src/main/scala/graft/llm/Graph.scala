@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Exact
 import graft.sources.Tables
 
 /** Graph analytics over the customer↔supplier interaction graph derived
@@ -24,8 +25,7 @@ import graft.sources.Tables
   * and the dangling-mass term vanishes — documented semantics, matching
   * the undirected-co-occurrence reading of "shares a lineitem".
   *
-  * Determinism: per-node contribution sums are DECIMAL(28,12) casts of
-  * double terms (the repo's order-insensitive aggregation pattern), so
+  * Determinism: per-node contribution sums are [[graft.Exact]] sums, so
   * rank vectors are bit-identical across partitionings and engines;
   * final projections round to 8.
   */
@@ -122,8 +122,7 @@ object Graph {
     for (_ <- 1 to Iters) {
       val contrib = e.join(ranks, $"src" === $"node")
         .groupBy($"dst")
-        .agg(sum(($"rank" / $"outdeg").cast("decimal(28,12)"))
-          .cast("double").as("mass"))
+        .agg(Exact.sum($"rank" / $"outdeg").as("mass"))
       ranks = contrib.crossJoin(totals)
         .select($"dst".as("node"),
           (lit(Teleport) / $"n_nodes" + lit(Damping) * $"mass").as("rank"))
@@ -152,7 +151,7 @@ object Graph {
          |  SELECT e.dst AS node,
          |    CAST(0.15 AS DOUBLE) / t.n_nodes
          |      + CAST(0.85 AS DOUBLE)
-         |        * CAST(SUM(CAST(p.rank / d.outdeg AS DECIMAL(28,12))) AS DOUBLE)
+         |        * ${Exact.sumSql("p.rank / d.outdeg")}
          |      AS rank
          |  FROM edges e
          |  JOIN $prev p ON e.src = p.node
@@ -204,7 +203,7 @@ object Graph {
         count(lit(1)).as("n_nodes"),
         sum($"outdeg").as("sum_degree"),
         max($"outdeg").as("max_degree"),
-        round(sum($"outdeg".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"outdeg")
           / count(lit(1)), 6).as("avg_degree"))
       .orderBy($"side", $"deg_bucket")
   }
@@ -222,7 +221,7 @@ object Graph {
        |  CAST(COUNT(*) AS BIGINT) AS n_nodes,
        |  CAST(SUM(outdeg) AS BIGINT) AS sum_degree,
        |  CAST(MAX(outdeg) AS BIGINT) AS max_degree,
-       |  ROUND(CAST(SUM(CAST(outdeg AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*), 6)
+       |  ROUND(${Exact.sumSql("outdeg")} / COUNT(*), 6)
        |    AS avg_degree
        |FROM deg
        |GROUP BY 1, 2
@@ -981,7 +980,6 @@ object Graph {
   // DECIMAL(28,6) sums.
   def reciprocity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
     val sn = broadcast(Tables.supplier(spark, dir)
       .select($"s_suppkey", $"s_nationkey".as("sn")))
     val cn = broadcast(Tables.customer(spark, dir)
@@ -993,7 +991,7 @@ object Graph {
       .select($"sn", $"cn",
         ($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("rev"))
       .groupBy($"sn", $"cn")
-      .agg(sum($"rev".cast(DecimalType(18, 6))).cast("double").as("w")))
+      .agg(Exact.sum($"rev", 6, 18).as("w")))
     val off = w.filter($"sn" =!= $"cn")
     val rec = off.join(
       broadcast(off.select($"sn".as("tn"), $"cn".as("tc"), $"w".as("wt"))),
@@ -1005,12 +1003,11 @@ object Graph {
       // WaveTenSpec's naive recomputation)
       .select($"w", least($"w", coalesce($"wt", lit(0.0))).as("wmin"))
       .agg(count(lit(1)).as("n_edges"),
-        sum($"w".cast(DecimalType(28, 6))).cast("double").as("tw"),
-        sum($"wmin".cast(DecimalType(28, 6))).cast("double").as("tmin"))
+        Exact.sum($"w", 6).as("tw"),
+        Exact.sum($"wmin", 6).as("tmin"))
     val dom = w.agg(
-      sum(when($"sn" === $"cn", $"w").otherwise(0.0)
-        .cast(DecimalType(28, 6))).cast("double").as("wdom"),
-      sum($"w".cast(DecimalType(28, 6))).cast("double").as("wall"),
+      Exact.sum(when($"sn" === $"cn", $"w").otherwise(0.0), 6).as("wdom"),
+      Exact.sum($"w", 6).as("wall"),
       countDistinct($"sn").as("n_nations"))
     rec.crossJoin(broadcast(dom))
       .select($"n_nations", $"n_edges",
@@ -1019,10 +1016,9 @@ object Graph {
   }
 
   val reciprocitySql: String =
-    """WITH w AS MATERIALIZED (
+    s"""WITH w AS MATERIALIZED (
       |  SELECT s.s_nationkey AS sn, c.c_nationkey AS cn,
-      |    CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-      |      AS DECIMAL(18,6))) AS DOUBLE) AS w
+      |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 6, 18)} AS w
       |  FROM lineitem
       |  JOIN orders ON l_orderkey = o_orderkey
       |  JOIN supplier s ON l_suppkey = s.s_suppkey
@@ -1031,15 +1027,13 @@ object Graph {
       |off AS (SELECT * FROM w WHERE sn <> cn),
       |rec AS (
       |  SELECT COUNT(*) AS n_edges,
-      |    CAST(SUM(CAST(a.w AS DECIMAL(28,6))) AS DOUBLE) AS tw,
-      |    CAST(SUM(CAST(LEAST(a.w, COALESCE(b.w, 0.0)) AS DECIMAL(28,6)))
-      |      AS DOUBLE) AS tmin
+      |    ${Exact.sumSql("a.w", 6)} AS tw,
+      |    ${Exact.sumSql("LEAST(a.w, COALESCE(b.w, 0.0))", 6)} AS tmin
       |  FROM off a LEFT JOIN off b ON a.sn = b.cn AND a.cn = b.sn),
       |dom AS (
       |  SELECT
-      |    CAST(SUM(CAST(CASE WHEN sn = cn THEN w ELSE 0.0 END
-      |      AS DECIMAL(28,6))) AS DOUBLE) AS wdom,
-      |    CAST(SUM(CAST(w AS DECIMAL(28,6))) AS DOUBLE) AS wall,
+      |    ${Exact.sumSql("CASE WHEN sn = cn THEN w ELSE 0.0 END", 6)} AS wdom,
+      |    ${Exact.sumSql("w", 6)} AS wall,
       |    COUNT(DISTINCT sn) AS n_nations
       |  FROM w)
       |SELECT CAST(n_nations AS BIGINT) AS n_nations,
@@ -1077,19 +1071,17 @@ object Graph {
     val pairs = edgesWithDeg(spark, dir)
       .filter($"src" % 2 === 0)
       .select($"src".as("c"), $"dst".as("s"))
-    def dsum0(c: org.apache.spark.sql.Column) =
-      sum(c).cast("decimal(38,0)")
     // h0 = 1 ⇒ a1(s) = in-degree; each subsequent half-step is one
     // pair-table join + groupBy. a3 feeds h3 AND the output/total —
     // materialized (node-cardinality) so the chain isn't replayed.
     val a1 = pairs.groupBy($"s").agg(count(lit(1)).cast("decimal(38,0)").as("w"))
-    val h1 = pairs.join(a1, "s").groupBy($"c").agg(dsum0($"w").as("w"))
-    val a2 = pairs.join(h1, "c").groupBy($"s").agg(dsum0($"w").as("w"))
-    val h2 = pairs.join(a2, "s").groupBy($"c").agg(dsum0($"w").as("w"))
+    val h1 = pairs.join(a1, "s").groupBy($"c").agg(sum($"w").cast("decimal(38,0)").as("w"))
+    val a2 = pairs.join(h1, "c").groupBy($"s").agg(sum($"w").cast("decimal(38,0)").as("w"))
+    val h2 = pairs.join(a2, "s").groupBy($"c").agg(sum($"w").cast("decimal(38,0)").as("w"))
     val a3 = Tables.materialize(
-      pairs.join(h2, "c").groupBy($"s").agg(dsum0($"w").as("w")))
+      pairs.join(h2, "c").groupBy($"s").agg(sum($"w").cast("decimal(38,0)").as("w")))
     val h3 = Tables.materialize(
-      pairs.join(a3, "s").groupBy($"c").agg(dsum0($"w").as("w")))
+      pairs.join(a3, "s").groupBy($"c").agg(sum($"w").cast("decimal(38,0)").as("w")))
     (a3, h3)
   }
 
@@ -1319,7 +1311,7 @@ object Graph {
       .groupBy($"side")
       .agg(sum($"c").as("n_nodes"), max($"dmin").as("d_min"),
         max($"d").as("d_max"),
-        round(sum(($"c" * $"d").cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"c" * $"d")
           / sum($"c"), 6).as("avg_degree"),
         round(lit(1.0) + sum($"c").cast("double")
           / sum($"t").cast("double"), 6).as("alpha"))
@@ -1346,7 +1338,7 @@ object Graph {
        |SELECT side, CAST(SUM(c) AS BIGINT) AS n_nodes,
        |  CAST(MAX(dmin) AS BIGINT) AS d_min,
        |  CAST(MAX(d) AS BIGINT) AS d_max,
-       |  ROUND(CAST(SUM(CAST(c * d AS DECIMAL(28,12))) AS DOUBLE)
+       |  ROUND(${Exact.sumSql("c * d")}
        |    / SUM(c), 6) AS avg_degree,
        |  ROUND(1.0 + CAST(SUM(c) AS DOUBLE) / CAST(SUM(t) AS DOUBLE), 6)
        |    AS alpha

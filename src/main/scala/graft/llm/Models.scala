@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Exact
 import graft.sources.Tables
 
 /** Distributed model fitting over corpus-scale features — the "train a
@@ -18,9 +19,9 @@ import graft.sources.Tables
   * size, so the shuffle moves d²×partitions scalars and the solve itself
   * happens on a handful of doubles. Nothing corpus-sized ever moves.
   *
-  * Determinism: every corpus sum is a DECIMAL(28,12) cast of
-  * identically-computed double terms (order-insensitive); the closed-form
-  * 2×2 solve then runs on identical doubles in both engines.
+  * Determinism: every corpus sum is a [[graft.Exact]] sum of
+  * identically-computed double terms; the closed-form 2×2 solve then
+  * runs on identical doubles in both engines.
   */
 object Models {
 
@@ -40,11 +41,8 @@ object Models {
     // carried on the base exactly for this consumer)
     val f = lrBase(spark, dir).select($"x1", $"x2", $"quality".as("y"))
 
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
-
     val m = f.agg(
-      dsum($"x1").as("sx1"), dsum($"x2").as("sx2"), dsum($"y").as("sy"),
+      Exact.sum($"x1").as("sx1"), Exact.sum($"x2").as("sx2"), Exact.sum($"y").as("sy"),
       count(lit(1)).as("n")).head()
     val n = m.getAs[Long]("n").toDouble
     val (mx1, mx2, my) =
@@ -52,12 +50,12 @@ object Models {
         m.getAs[Double]("sy") / n)
 
     val g = f.agg(
-      dsum(($"x1" - mx1) * ($"x1" - mx1)).as("s11"),
-      dsum(($"x1" - mx1) * ($"x2" - mx2)).as("s12"),
-      dsum(($"x2" - mx2) * ($"x2" - mx2)).as("s22"),
-      dsum(($"x1" - mx1) * ($"y" - my)).as("sy1"),
-      dsum(($"x2" - mx2) * ($"y" - my)).as("sy2"),
-      dsum(($"y" - my) * ($"y" - my)).as("syy")).head()
+      Exact.sum(($"x1" - mx1) * ($"x1" - mx1)).as("s11"),
+      Exact.sum(($"x1" - mx1) * ($"x2" - mx2)).as("s12"),
+      Exact.sum(($"x2" - mx2) * ($"x2" - mx2)).as("s22"),
+      Exact.sum(($"x1" - mx1) * ($"y" - my)).as("sy1"),
+      Exact.sum(($"x2" - mx2) * ($"y" - my)).as("sy2"),
+      Exact.sum(($"y" - my) * ($"y" - my)).as("syy")).head()
     val (s11, s12, s22) = (g.getAs[Double]("s11"), g.getAs[Double]("s12"),
       g.getAs[Double]("s22"))
     val (sy1, sy2, syy) = (g.getAs[Double]("sy1"), g.getAs[Double]("sy2"),
@@ -69,17 +67,17 @@ object Models {
     val b = my - w1 * mx1 - w2 * mx2
 
     val sse = f.agg(
-      dsum(($"y" - (lit(b) + lit(w1) * $"x1" + lit(w2) * $"x2"))
+      Exact.sum(($"y" - (lit(b) + lit(w1) * $"x1" + lit(w2) * $"x2"))
         * ($"y" - (lit(b) + lit(w1) * $"x1" + lit(w2) * $"x2"))).as("sse"))
       .head().getAs[Double]("sse")
     val r2 = 1.0 - sse / syy
 
     spark.createDataFrame(Seq(
       (math.round(n).toLong,
-        BigDecimal(w1).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        BigDecimal(w2).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        BigDecimal(b).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        BigDecimal(r2).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
+        Exact.round(w1, 6),
+        Exact.round(w2, 6),
+        Exact.round(b, 6),
+        Exact.round(r2, 6))))
       .toDF("n", "w_chars", "w_words", "intercept", "r2")
   }
 
@@ -94,19 +92,19 @@ object Models {
        |  FROM documents d JOIN q ON d.doc_id = q.doc_id),
        |m AS (
        |  SELECT
-       |    CAST(SUM(CAST(x1 AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS mx1,
-       |    CAST(SUM(CAST(x2 AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS mx2,
-       |    CAST(SUM(CAST(y  AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS my,
+       |    ${Exact.sumSql("x1")} / COUNT(*) AS mx1,
+       |    ${Exact.sumSql("x2")} / COUNT(*) AS mx2,
+       |    ${Exact.sumSql("y")} / COUNT(*) AS my,
        |    COUNT(*) AS n
        |  FROM f),
        |g AS (
        |  SELECT
-       |    CAST(SUM(CAST((x1 - m.mx1) * (x1 - m.mx1) AS DECIMAL(28,12))) AS DOUBLE) AS s11,
-       |    CAST(SUM(CAST((x1 - m.mx1) * (x2 - m.mx2) AS DECIMAL(28,12))) AS DOUBLE) AS s12,
-       |    CAST(SUM(CAST((x2 - m.mx2) * (x2 - m.mx2) AS DECIMAL(28,12))) AS DOUBLE) AS s22,
-       |    CAST(SUM(CAST((x1 - m.mx1) * (y - m.my) AS DECIMAL(28,12))) AS DOUBLE) AS sy1,
-       |    CAST(SUM(CAST((x2 - m.mx2) * (y - m.my) AS DECIMAL(28,12))) AS DOUBLE) AS sy2,
-       |    CAST(SUM(CAST((y - m.my) * (y - m.my) AS DECIMAL(28,12))) AS DOUBLE) AS syy,
+       |    ${Exact.sumSql("(x1 - m.mx1) * (x1 - m.mx1)")} AS s11,
+       |    ${Exact.sumSql("(x1 - m.mx1) * (x2 - m.mx2)")} AS s12,
+       |    ${Exact.sumSql("(x2 - m.mx2) * (x2 - m.mx2)")} AS s22,
+       |    ${Exact.sumSql("(x1 - m.mx1) * (y - m.my)")} AS sy1,
+       |    ${Exact.sumSql("(x2 - m.mx2) * (y - m.my)")} AS sy2,
+       |    ${Exact.sumSql("(y - m.my) * (y - m.my)")} AS syy,
        |    ANY_VALUE(m.n) AS n, ANY_VALUE(m.mx1) AS mx1,
        |    ANY_VALUE(m.mx2) AS mx2, ANY_VALUE(m.my) AS my
        |  FROM f CROSS JOIN m),
@@ -120,9 +118,7 @@ object Models {
        |wb AS (SELECT *, my - w1 * mx1 - w2 * mx2 AS b FROM w),
        |sse AS (
        |  SELECT
-       |    CAST(SUM(CAST((f.y - (wb.b + wb.w1 * f.x1 + wb.w2 * f.x2))
-       |      * (f.y - (wb.b + wb.w1 * f.x1 + wb.w2 * f.x2))
-       |      AS DECIMAL(28,12))) AS DOUBLE) AS sse,
+       |    ${Exact.sumSql("(f.y - (wb.b + wb.w1 * f.x1 + wb.w2 * f.x2)) * (f.y - (wb.b + wb.w1 * f.x1 + wb.w2 * f.x2))")} AS sse,
        |    ANY_VALUE(wb.n) AS n, ANY_VALUE(wb.w1) AS w1,
        |    ANY_VALUE(wb.w2) AS w2, ANY_VALUE(wb.b) AS b,
        |    ANY_VALUE(wb.syy) AS syy
@@ -157,8 +153,6 @@ object Models {
   private val LrEta = 1.0
   private val LrSteps = 3
 
-  private def dsum12(c: org.apache.spark.sql.Column) =
-    sum(c.cast("decimal(28,12)")).cast("double")
   private def sig(z: org.apache.spark.sql.Column) =
     lit(0.5) + lit(0.5) * z / (lit(1.0) + abs(z))
 
@@ -174,9 +168,9 @@ object Models {
     for (_ <- 1 to LrSteps) {
       val z = lit(b) + lit(w1) * col("x1") + lit(w2) * col("x2")
       val g = f.agg(
-        dsum12((sig(z) - col("y")) * col("x1")).as("g1"),
-        dsum12((sig(z) - col("y")) * col("x2")).as("g2"),
-        dsum12(sig(z) - col("y")).as("gb")).head()
+        Exact.sum((sig(z) - col("y")) * col("x1")).as("g1"),
+        Exact.sum((sig(z) - col("y")) * col("x2")).as("g2"),
+        Exact.sum(sig(z) - col("y")).as("gb")).head()
       w1 -= LrEta * g.getAs[Double]("g1") / n
       w2 -= LrEta * g.getAs[Double]("g2") / n
       b -= LrEta * g.getAs[Double]("gb") / n
@@ -241,24 +235,22 @@ object Models {
 
   def logreg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) = dsum12(c)
     val (f, w1, w2, b) = logregFit(spark, dir)
     val n = f.count().toDouble
 
     val zf = lit(b) + lit(w1) * $"x1" + lit(w2) * $"x2"
     val m = f.agg(
-      dsum($"y").as("n_pos"),
+      Exact.sum($"y").as("n_pos"),
       sum(when((zf >= 0.0) === ($"y" === 1.0), 1L).otherwise(0L))
         .as("n_correct")).head()
 
     spark.createDataFrame(Seq((
       math.round(n).toLong,
       math.round(m.getAs[Double]("n_pos")).toLong,
-      BigDecimal(w1).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(w2).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(b).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(m.getAs[Long]("n_correct") / n)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
+      Exact.round(w1, 6),
+      Exact.round(w2, 6),
+      Exact.round(b, 6),
+      Exact.round(m.getAs[Long]("n_correct") / n, 6))))
       .toDF("n", "n_pos", "w_chars", "w_words", "intercept", "accuracy")
   }
 
@@ -283,9 +275,9 @@ object Models {
       val z = s"$prevW.b + $prevW.w1 * f.x1 + $prevW.w2 * f.x2"
       s"""$g AS (
          |  SELECT
-         |    CAST(SUM(CAST((${sigSql(z)} - f.y) * f.x1 AS DECIMAL(28,12))) AS DOUBLE) AS g1,
-         |    CAST(SUM(CAST((${sigSql(z)} - f.y) * f.x2 AS DECIMAL(28,12))) AS DOUBLE) AS g2,
-         |    CAST(SUM(CAST((${sigSql(z)} - f.y) AS DECIMAL(28,12))) AS DOUBLE) AS gb,
+         |    ${Exact.sumSql(s"(${sigSql(z)} - f.y) * f.x1")} AS g1,
+         |    ${Exact.sumSql(s"(${sigSql(z)} - f.y) * f.x2")} AS g2,
+         |    ${Exact.sumSql(s"(${sigSql(z)} - f.y)")} AS gb,
          |    COUNT(*) AS n
          |  FROM f CROSS JOIN $prevW $prevW),
          |$w AS (
@@ -324,7 +316,7 @@ object Models {
        |m AS (
        |  SELECT
        |    COUNT(*) AS n,
-       |    CAST(CAST(SUM(CAST(f.y AS DECIMAL(28,12))) AS DOUBLE) AS BIGINT)
+       |    CAST(${Exact.sumSql("f.y")} AS BIGINT)
        |      AS n_pos,
        |    SUM(CASE WHEN ((w.b + w.w1 * f.x1 + w.w2 * f.x2) >= 0.0)
        |          = (f.y = 1.0) THEN 1 ELSE 0 END) AS n_correct,
@@ -356,26 +348,24 @@ object Models {
         $"p", $"y")
       .groupBy($"bin")
       .agg(count(lit(1)).as("n"),
-        round(dsum12($"p") / count(lit(1)), 6).as("mean_pred"),
-        round(dsum12($"y") / count(lit(1)), 6).as("pos_rate"),
-        round(abs(dsum12($"p") / count(lit(1))
-          - dsum12($"y") / count(lit(1))), 6).as("gap"))
+        round(Exact.sum($"p") / count(lit(1)), 6).as("mean_pred"),
+        round(Exact.sum($"y") / count(lit(1)), 6).as("pos_rate"),
+        round(abs(Exact.sum($"p") / count(lit(1))
+          - Exact.sum($"y") / count(lit(1))), 6).as("gap"))
       .orderBy($"bin")
   }
 
   val calibrationSql: String = {
     val p = sigSql("w.b + w.w1 * f.x1 + w.w2 * f.x2")
-    def d12(e: String) =
-      s"CAST(SUM(CAST(($e) AS DECIMAL(28,12))) AS DOUBLE)"
     s"""WITH $logregChainSql,
        |s AS (
        |  SELECT LEAST(CAST(FLOOR($p * 10) AS INT), 9) AS bin,
        |    $p AS p, f.y AS y
        |  FROM f CROSS JOIN w3s w)
        |SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
-       |  ROUND(${d12("p")} / COUNT(*), 6) AS mean_pred,
-       |  ROUND(${d12("y")} / COUNT(*), 6) AS pos_rate,
-       |  ROUND(ABS(${d12("p")} / COUNT(*) - ${d12("y")} / COUNT(*)), 6)
+       |  ROUND(${Exact.sumSql("p")} / COUNT(*), 6) AS mean_pred,
+       |  ROUND(${Exact.sumSql("y")} / COUNT(*), 6) AS pos_rate,
+       |  ROUND(ABS(${Exact.sumSql("p")} / COUNT(*) - ${Exact.sumSql("y")} / COUNT(*)), 6)
        |    AS gap
        |FROM s GROUP BY bin ORDER BY bin""".stripMargin
   }
@@ -444,9 +434,8 @@ object Models {
       (2.0 * np.toDouble * nn.toDouble)
     spark.createDataFrame(Seq((
       np + nn, np, nn, agg.getAs[Long]("n_scores"),
-      BigDecimal(aucV).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(2.0 * aucV - 1.0)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
+      Exact.round(aucV, 6),
+      Exact.round(2.0 * aucV - 1.0, 6))))
       .toDF("n", "n_pos", "n_neg", "n_scores", "auc", "gini")
   }
 
@@ -564,17 +553,15 @@ object Models {
     // over the checkpointed histogram — bounded-domain, no corpus cost
     val blocks = prBlocksFrom(hist, np)
     val a = blocks.agg(
-      sum($"term".cast("decimal(28,12)")).cast("double").as("ap"),
+      Exact.sum($"term").as("ap"),
       max($"f1").as("bf"), count(lit(1)).as("ns")).head()
     val thr = blocks.filter($"f1" === a.getAs[Double]("bf"))
       .agg(min($"p")).head().getDouble(0)
     spark.createDataFrame(Seq((
       np + nn, np, nn, a.getAs[Long]("ns"),
-      BigDecimal(a.getAs[Double]("ap"))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(a.getAs[Double]("bf"))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(thr).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
+      Exact.round(a.getAs[Double]("ap"), 6),
+      Exact.round(a.getAs[Double]("bf"), 6),
+      Exact.round(thr, 6))))
       .toDF("n", "n_pos", "n_neg", "n_scores", "pr_auc", "best_f1",
         "best_f1_threshold")
   }
@@ -613,7 +600,7 @@ object Models {
        |      * (d.prec + d.precPrev) / 2.0 AS term
        |  FROM d CROSS JOIN tt),
        |a AS (
-       |  SELECT CAST(SUM(CAST(term AS DECIMAL(28,12))) AS DOUBLE) AS ap,
+       |  SELECT ${Exact.sumSql("term")} AS ap,
        |    MAX(f1) AS bf, COUNT(*) AS ns
        |  FROM e)""".stripMargin
   }
@@ -650,7 +637,7 @@ object Models {
     val scored = Tables.materialize(f.select(p.as("p"), $"y"))
     val m = scored.agg(count(lit(1)).as("n"),
       sum(when($"y" === 1.0, 1L).otherwise(0L)).as("npos"),
-      dsum12(($"p" - $"y") * ($"p" - $"y")).as("sse")).head()
+      Exact.sum(($"p" - $"y") * ($"p" - $"y")).as("sse")).head()
     val n = m.getAs[Long]("n")
     if (n == 0L)
       return spark.createDataFrame(
@@ -661,43 +648,38 @@ object Models {
     val bs = m.getAs[Double]("sse") / n.toDouble
     val bins = scored
       .groupBy(least(floor($"p" * 10), lit(9)).cast("int").as("bin"))
-      .agg(count(lit(1)).as("nk"), dsum12($"p").as("sp"),
+      .agg(count(lit(1)).as("nk"), Exact.sum($"p").as("sp"),
         sum(when($"y" === 1.0, 1L).otherwise(0L)).as("pk"))
       .select($"nk".cast("double").as("nk"),
         ($"sp" / $"nk".cast("double")).as("pbar"),
         ($"pk".cast("double") / $"nk".cast("double")).as("okbar"))
     val t = bins.agg(
-      (sum(($"nk" * ($"pbar" - $"okbar") * ($"pbar" - $"okbar"))
-        .cast("decimal(28,12)")).cast("double") / n.toDouble).as("rel"),
-      (sum(($"nk" * ($"okbar" - obar) * ($"okbar" - obar))
-        .cast("decimal(28,12)")).cast("double") / n.toDouble).as("res"))
+      (Exact.sum($"nk" * ($"pbar" - $"okbar") * ($"pbar" - $"okbar")) / n.toDouble).as("rel"),
+      (Exact.sum($"nk" * ($"okbar" - obar) * ($"okbar" - obar)) / n.toDouble).as("res"))
       .head()
     val (rel, res) = (t.getAs[Double]("rel"), t.getAs[Double]("res"))
     val unc = obar * (1.0 - obar)
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     spark.createDataFrame(Seq((
-      n, m.getAs[Long]("npos"), r6(bs), r6(rel), r6(res), r6(unc),
-      r6(bs - (rel - res + unc)))))
+      n, m.getAs[Long]("npos"), Exact.round(bs, 6), Exact.round(rel, 6),
+      Exact.round(res, 6), Exact.round(unc, 6),
+      Exact.round(bs - (rel - res + unc), 6))))
       .toDF("n", "n_pos", "brier", "reliability", "resolution",
         "uncertainty", "decomp_gap")
   }
 
   val brierSql: String = {
     val p = sigSql("w.b + w.w1 * f.x1 + w.w2 * f.x2")
-    def d12(e: String) =
-      s"CAST(SUM(CAST(($e) AS DECIMAL(28,12))) AS DOUBLE)"
     s"""WITH $logregChainSql,
        |sc AS (SELECT $p AS p, f.y AS y FROM f CROSS JOIN w3s w),
        |m AS (
        |  SELECT COUNT(*) AS n,
        |    SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS npos,
-       |    ${d12("(p - y) * (p - y)")} AS sse
+       |    ${Exact.sumSql("(p - y) * (p - y)")} AS sse
        |  FROM sc),
        |g AS (
        |  SELECT LEAST(CAST(FLOOR(p * 10) AS INT), 9) AS bin,
        |    CAST(COUNT(*) AS DOUBLE) AS nk,
-       |    ${d12("p")} AS sp,
+       |    ${Exact.sumSql("p")} AS sp,
        |    SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS pk
        |  FROM sc GROUP BY 1),
        |k AS (
@@ -707,9 +689,9 @@ object Models {
        |  FROM g CROSS JOIN m),
        |t AS (
        |  SELECT
-       |    ${d12("nk * (pbar - okbar) * (pbar - okbar)")}
+       |    ${Exact.sumSql("nk * (pbar - okbar) * (pbar - okbar)")}
        |      / ANY_VALUE(n) AS rel,
-       |    ${d12("nk * (okbar - obar) * (okbar - obar)")}
+       |    ${Exact.sumSql("nk * (okbar - obar) * (okbar - obar)")}
        |      / ANY_VALUE(n) AS res,
        |    ANY_VALUE(sse) / ANY_VALUE(n) AS bs,
        |    ANY_VALUE(obar) * (1.0 - ANY_VALUE(obar)) AS unc,
@@ -756,8 +738,8 @@ object Models {
     val ksV = a.getAs[Double]("ks")
     val thr = diffs.filter($"diff" === ksV).agg(min($"p")).head().getDouble(0)
     spark.createDataFrame(Seq((np, nn, a.getAs[Long]("ns"),
-      BigDecimal(ksV).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(thr).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
+      Exact.round(ksV, 6),
+      Exact.round(thr, 6))))
       .toDF("n_pos", "n_neg", "n_scores", "ks", "ks_threshold")
   }
 
@@ -823,17 +805,15 @@ object Models {
     val (tp, fp) = (m.getAs[Long]("tp"), m.getAs[Long]("fp"))
     val (fn, tn) = (np - tp, nn - fp)
     val n = np + nn
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val denom = math.sqrt((tp + fp).toDouble * (tp + fn).toDouble
       * (tn + fp).toDouble * (tn + fn).toDouble)
     val mcc = if (denom == 0.0) 0.0
       else (tp.toDouble * tn.toDouble - fp.toDouble * fn.toDouble) / denom
     spark.createDataFrame(Seq((
-      n, np, r6(thr), tp, fp, tn, fn,
-      r6(if (tp + fp == 0L) 0.0 else tp.toDouble / (tp + fp).toDouble),
-      r6(tp.toDouble / np.toDouble),
-      r6((tp + tn).toDouble / n.toDouble), r6(mcc))))
+      n, np, Exact.round(thr, 6), tp, fp, tn, fn,
+      Exact.round(if (tp + fp == 0L) 0.0 else tp.toDouble / (tp + fp).toDouble, 6),
+      Exact.round(tp.toDouble / np.toDouble, 6),
+      Exact.round((tp + tn).toDouble / n.toDouble, 6), Exact.round(mcc, 6))))
       .toDF("n", "n_pos", "threshold", "tp", "fp", "tn", "fn",
         "precision", "recall", "accuracy", "mcc")
   }
@@ -907,12 +887,11 @@ object Models {
     val bj = pts.agg(max($"j")).head().getDouble(0)
     val best = pts.filter($"j" === bj)
       .orderBy($"p".asc).limit(1).head()
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val (tpr, fpr) = (best.getAs[Double]("tpr"), best.getAs[Double]("fpr"))
     spark.createDataFrame(Seq((
-      np + nn, np, r6(best.getAs[Double]("p")), r6(tpr), r6(fpr),
-      r6(tpr - fpr), r6((tpr + (1.0 - fpr)) / 2.0))))
+      np + nn, np, Exact.round(best.getAs[Double]("p"), 6),
+      Exact.round(tpr, 6), Exact.round(fpr, 6),
+      Exact.round(tpr - fpr, 6), Exact.round((tpr + (1.0 - fpr)) / 2.0, 6))))
       .toDF("n", "n_pos", "threshold", "tpr", "fpr", "youden_j",
         "balanced_acc")
   }
@@ -984,8 +963,6 @@ object Models {
         Seq.empty[(Long, Long, Double, Double, Double, Double)])
         .toDF("pct_train", "n_train", "accuracy", "w_chars", "w_words",
           "intercept")
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val rows = Seq(25L, 50L, 75L, 100L).flatMap { frac =>
       val tr = f.filter($"bucket" < frac)
       val nTr = tr.count()
@@ -996,7 +973,8 @@ object Models {
         val acc = f.agg(
           sum(when((zf >= 0.0) === ($"y" === 1.0), 1L).otherwise(0L))
             .as("ok")).head().getAs[Long]("ok").toDouble / nFull.toDouble
-        Some((frac, nTr, r6(acc), r6(w1), r6(w2), r6(b)))
+        Some((frac, nTr, Exact.round(acc, 6), Exact.round(w1, 6),
+          Exact.round(w2, 6), Exact.round(b, 6)))
       }
     }
     spark.createDataFrame(rows)
@@ -1011,9 +989,9 @@ object Models {
       val z = s"$prevW.b + $prevW.w1 * f.x1 + $prevW.w2 * f.x2"
       s"""$g AS (
          |  SELECT
-         |    CAST(SUM(CAST((${sigSql(z)} - f.y) * f.x1 AS DECIMAL(28,12))) AS DOUBLE) AS g1,
-         |    CAST(SUM(CAST((${sigSql(z)} - f.y) * f.x2 AS DECIMAL(28,12))) AS DOUBLE) AS g2,
-         |    CAST(SUM(CAST((${sigSql(z)} - f.y) AS DECIMAL(28,12))) AS DOUBLE) AS gb,
+         |    ${Exact.sumSql(s"(${sigSql(z)} - f.y) * f.x1")} AS g1,
+         |    ${Exact.sumSql(s"(${sigSql(z)} - f.y) * f.x2")} AS g2,
+         |    ${Exact.sumSql(s"(${sigSql(z)} - f.y)")} AS gb,
          |    COUNT(*) AS n
          |  FROM (SELECT * FROM fb WHERE bucket < $frac) f
          |  CROSS JOIN $prevW $prevW),
@@ -1184,11 +1162,9 @@ object Models {
         val d = math.max(math.abs((npo - ngo).toDouble) - 1.0, 0.0)
         d * d / disc.toDouble
       }
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     spark.createDataFrame(Seq((n, nb, npo, ngo, nn,
-        r6((nb + npo).toDouble / n), r6((nb + ngo).toDouble / n),
-        r6(chi2), if (chi2 > 3.8416) 1L else 0L)))
+        Exact.round((nb + npo).toDouble / n, 6), Exact.round((nb + ngo).toDouble / n, 6),
+        Exact.round(chi2, 6), if (chi2 > 3.8416) 1L else 0L)))
       .toDF("n", "n_both", "n_probe_only", "n_gopher_only", "n_neither",
         "acc_probe", "acc_gopher", "chi2", "significant")
   }
@@ -1341,8 +1317,7 @@ object Models {
        |  CROSS JOIN tot t),
        |a AS (
        |  SELECT source, MAX(ns) AS n_docs,
-       |    CAST(SUM(CAST((ps - pc) * LN(ps / pc) AS DECIMAL(28,12)))
-       |      AS DOUBLE) AS psi_raw
+       |    ${Exact.sumSql("(ps - pc) * LN(ps / pc)")} AS psi_raw
        |  FROM grid GROUP BY 1)
        |SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
        |  ROUND(psi_raw, 6) AS psi,
@@ -1381,7 +1356,7 @@ object Models {
       .groupBy(floor($"p" * 10).cast("int").as("bin"))
       .agg(count(lit(1)).as("n"),
         sum($"y".cast("long")).as("obs_pos"),
-        sum($"p".cast(DecimalType(28, 12))).cast("double").as("exp_pos"))
+        Exact.sum($"p").as("exp_pos"))
     val terms = bins.select($"bin", $"n", $"obs_pos", $"exp_pos",
       (($"obs_pos".cast("double") - $"exp_pos")
         * ($"obs_pos".cast("double") - $"exp_pos")
@@ -1392,7 +1367,7 @@ object Models {
     // g < 3 (df < 1) leaves the test undefined → 'calibrated' by
     // convention (too few bins to reject). Oracle mirrors exactly.
     val tot = terms
-      .agg(sum($"term".cast(DecimalType(28, 12))).cast("double").as("hl"),
+      .agg(Exact.sum($"term").as("hl"),
         count(lit(1)).as("g"))
       .select($"hl", $"g",
         when($"g" - 2 === 1, 3.8415).when($"g" - 2 === 2, 5.9915)
@@ -1417,7 +1392,7 @@ object Models {
        |bins AS (
        |  SELECT CAST(FLOOR(p * 10) AS INT) AS bin, COUNT(*) AS n,
        |    CAST(SUM(CAST(y AS BIGINT)) AS BIGINT) AS obs_pos,
-       |    CAST(SUM(CAST(p AS DECIMAL(28,12))) AS DOUBLE) AS exp_pos
+       |    ${Exact.sumSql("p")} AS exp_pos
        |  FROM sc GROUP BY 1),
        |terms AS (
        |  SELECT bin, n, obs_pos, exp_pos,
@@ -1426,7 +1401,7 @@ object Models {
        |      / (exp_pos * (1.0 - exp_pos / n)) AS term
        |  FROM bins),
        |x AS (
-       |  SELECT CAST(SUM(CAST(term AS DECIMAL(28,12))) AS DOUBLE) AS hl,
+       |  SELECT ${Exact.sumSql("term")} AS hl,
        |    COUNT(*) AS g,
        |    CASE COUNT(*) - 2 WHEN 1 THEN 3.8415 WHEN 2 THEN 5.9915
        |      WHEN 3 THEN 7.8147 WHEN 4 THEN 9.4877 WHEN 5 THEN 11.0705
@@ -1616,22 +1591,18 @@ object Models {
           .otherwise($"num".cast("double")
             / ($"np" * $"nn" * 2L).cast("double")).as("auc"))
       .collect().map(r => r.getDouble(1)).sorted
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def d12(x: Double) =
-      BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP)
     val bN = reps.length
     // double division AFTER the exact decimal fold — the same
     // (CAST(SUM(decimal) AS DOUBLE) / n) order the oracle runs
-    val mean = reps.map(d12).sum.toDouble / bN
+    val mean = Exact.sumLocal(reps) / bN
     val sd =
       if (bN <= 1) 0.0
       else math.sqrt(math.max(
-        reps.map(a => d12((a - mean) * (a - mean))).sum.toDouble
+        Exact.sumLocal(reps.map(a => (a - mean) * (a - mean)))
           / (bN - 1), 0.0))
-    spark.createDataFrame(Seq((bN.toLong, r6(mean), r6(sd),
-      r6(reps(math.ceil(0.05 * bN).toInt - 1)),
-      r6(reps(math.ceil(0.95 * bN).toInt - 1)))))
+    spark.createDataFrame(Seq((bN.toLong, Exact.round(mean, 6), Exact.round(sd, 6),
+      Exact.round(reps(math.ceil(0.05 * bN).toInt - 1), 6),
+      Exact.round(reps(math.ceil(0.95 * bN).toInt - 1), 6))))
       .toDF("n_reps", "boot_mean", "boot_sd", "boot_p5", "boot_p95")
   }
 
@@ -1683,13 +1654,12 @@ object Models {
        |  FROM reps),
        |m AS (
        |  SELECT COUNT(*) AS bn,
-       |    CAST(SUM(CAST(auc AS DECIMAL(28,12))) AS DOUBLE)
+       |    ${Exact.sumSql("auc")}
        |      / COUNT(*) AS mean
        |  FROM reps),
        |s AS (
        |  SELECT CASE WHEN m.bn <= 1 THEN 0.0
-       |    ELSE SQRT(GREATEST(CAST(SUM(CAST((r.auc - m.mean)
-       |      * (r.auc - m.mean) AS DECIMAL(28,12))) AS DOUBLE)
+       |    ELSE SQRT(GREATEST(${Exact.sumSql("(r.auc - m.mean) * (r.auc - m.mean)")}
        |      / (m.bn - 1), 0.0)) END AS sd
        |  FROM reps r CROSS JOIN m GROUP BY m.bn)
        |SELECT CAST(m.bn AS BIGINT) AS n_reps,
@@ -1901,10 +1871,9 @@ object Models {
         $"p", $"y")
       .groupBy($"bin")
       .agg(count(lit(1)).as("nb"),
-        dsum12($"p").as("sp"), dsum12($"y").as("sy"))
+        Exact.sum($"p").as("sp"), Exact.sum($"y").as("sy"))
     bins.agg(sum($"nb").as("n"), count(lit(1)).as("n_bins"),
-        sum(($"nb" * abs($"sp" / $"nb" - $"sy" / $"nb"))
-          .cast("decimal(28,12)")).cast("double").as("gsum"),
+        Exact.sum($"nb" * abs($"sp" / $"nb" - $"sy" / $"nb")).as("gsum"),
         max(abs($"sp" / $"nb" - $"sy" / $"nb")).as("mx"))
       .select($"n", $"n_bins",
         round($"gsum" / $"n", 6).as("ece"),
@@ -1919,13 +1888,12 @@ object Models {
        |    $p AS p, f.y AS y
        |  FROM f CROSS JOIN w3s w),
        |bi AS (SELECT bin, COUNT(*) AS nb,
-       |    CAST(SUM(CAST(p AS DECIMAL(28,12))) AS DOUBLE) AS sp,
-       |    CAST(SUM(CAST(y AS DECIMAL(28,12))) AS DOUBLE) AS sy
+       |    ${Exact.sumSql("p")} AS sp,
+       |    ${Exact.sumSql("y")} AS sy
        |  FROM s GROUP BY bin),
        |a AS (SELECT CAST(SUM(nb) AS BIGINT) AS n,
        |    COUNT(*) AS n_bins,
-       |    CAST(SUM(CAST(nb * ABS(sp / nb - sy / nb) AS DECIMAL(28,12)))
-       |      AS DOUBLE) AS gsum,
+       |    ${Exact.sumSql("nb * ABS(sp / nb - sy / nb)")} AS gsum,
        |    MAX(ABS(sp / nb - sy / nb)) AS mx
        |  FROM bi)
        |SELECT n, CAST(n_bins AS BIGINT) AS n_bins,

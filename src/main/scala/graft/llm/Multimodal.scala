@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Exact
 import graft.sources.Tables
 import TextAnalysis.{h60, h60Sql}
 
@@ -255,7 +256,7 @@ object Multimodal {
     val prompt = e.filter($"vec_id" < 4)
       .select(posexplode($"v").as(Seq("pos", "val")))
       .groupBy($"pos")
-      .agg((sum($"val".cast("decimal(28,12)")).cast("double")
+      .agg((Exact.sum($"val")
         / count(lit(1))).as("m"))
       .agg(expr("transform(array_sort(collect_list(struct(pos, m))), s -> s.m)")
         .as("pv"))
@@ -273,13 +274,13 @@ object Multimodal {
   }
 
   val mmClipFilterSql: String =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
       |  FROM embeddings),
       |ex AS (SELECT unnest(list_transform(range(0, len(v)),
       |    i -> {'pos': i, 'val': v[i+1]}), recursive := true)
       |  FROM e WHERE vec_id < 4),
       |pm AS (SELECT pos,
-      |    CAST(SUM(CAST(val AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS m
+      |    ${Exact.sumSql("val")} / COUNT(*) AS m
       |  FROM ex GROUP BY pos),
       |p AS (SELECT list(m ORDER BY pos) AS pv FROM pm),
       |pn AS (SELECT pv, sqrt(list_dot_product(pv, pv)) AS pnrm FROM p),
@@ -821,8 +822,7 @@ object Multimodal {
         countDistinct($"digest").as("nd"))
       .agg(count(lit(1)).as("n_videos"),
         sum($"nf").as("n_frames"),
-        round(sum((lit(1.0) - $"nd".cast("double") / $"nf")
-          .cast("decimal(28,12)")).cast("double") / count(lit(1)), 6)
+        round(Exact.sum(lit(1.0) - $"nd".cast("double") / $"nf") / count(lit(1)), 6)
           .as("mean_within_dup_frac"))
     val perDigest = frames.groupBy($"digest")
       .agg(countDistinct($"doc_id").as("ndocs"))
@@ -845,8 +845,7 @@ object Multimodal {
        |pv AS (SELECT doc_id, COUNT(*) AS nf,
        |    COUNT(DISTINCT digest) AS nd FROM f GROUP BY 1),
        |v AS (SELECT COUNT(*) AS n_videos, CAST(SUM(nf) AS BIGINT) AS n_frames,
-       |    ROUND(CAST(SUM(CAST(1.0 - CAST(nd AS DOUBLE) / nf
-       |      AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*), 6)
+       |    ROUND(${Exact.sumSql("1.0 - CAST(nd AS DOUBLE) / nf")} / COUNT(*), 6)
        |      AS mean_within_dup_frac
        |  FROM pv),
        |pd AS (SELECT digest, COUNT(DISTINCT doc_id) AS ndocs
@@ -899,7 +898,7 @@ object Multimodal {
       .agg((sum($"cut") + 1L).as("n_scenes"), count(lit(1)).as("n_sampled"))
     scenes.groupBy($"n_scenes")
       .agg(count(lit(1)).as("n_videos"),
-        round(sum($"n_sampled".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"n_sampled")
           / count(lit(1)), 6).as("avg_sampled_frames"))
       .orderBy($"n_scenes")
   }
@@ -927,7 +926,7 @@ object Multimodal {
        |  FROM c GROUP BY doc_id)
        |SELECT CAST(n_scenes AS BIGINT) AS n_scenes,
        |  CAST(COUNT(*) AS BIGINT) AS n_videos,
-       |  ROUND(CAST(SUM(CAST(n_sampled AS DECIMAL(28,12))) AS DOUBLE)
+       |  ROUND(${Exact.sumSql("n_sampled")}
        |    / COUNT(*), 6) AS avg_sampled_frames
        |FROM s GROUP BY n_scenes ORDER BY n_scenes""".stripMargin
 

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Exact
 import graft.sources.Tables
 import TextAnalysis.{h60, h60Sql}
 
@@ -708,7 +709,7 @@ object Pipeline {
         .otherwise($"tokens".cast("double") / $"corpus_toks"))
       .withColumn("w", sqrt($"raw_share"))
     val wsum = shares
-      .agg(coalesce(sum($"w".cast("decimal(28,12)")).cast("double"), lit(0.0))
+      .agg(coalesce(Exact.sum($"w"), lit(0.0))
         .as("w_sum"))
     val share = when($"w_sum" === 0, lit(0.0)).otherwise($"w" / $"w_sum")
     val target = share * lit(EpochBudgetMult) * $"corpus_toks"
@@ -739,8 +740,7 @@ object Pipeline {
        |    SQRT(CASE WHEN corpus_toks = 0 THEN 0.0
        |      ELSE CAST(tokens AS DOUBLE) / corpus_toks END) AS w
        |  FROM per CROSS JOIN tot),
-       |ws AS (SELECT COALESCE(CAST(SUM(CAST(w AS DECIMAL(28,12)))
-       |    AS DOUBLE), 0.0) AS w_sum FROM s),
+       |ws AS (SELECT COALESCE(${Exact.sumSql("w")}, 0.0) AS w_sum FROM s),
        |x AS (SELECT s.*, w_sum,
        |    CASE WHEN w_sum = 0 THEN 0.0 ELSE w / w_sum END AS sh
        |  FROM s CROSS JOIN ws),
@@ -964,7 +964,6 @@ object Pipeline {
   // order-insensitive.
   def effTokens(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
     val toks = Tables.documents(spark, dir)
       .select($"doc_id", $"source",
         size(regexp_extract_all($"text",
@@ -978,8 +977,7 @@ object Pipeline {
       .agg(
         count(lit(1)).as("n_docs"),
         sum($"n_toks").as("n_tokens"),
-        sum(($"weight" * $"n_toks").cast(DecimalType(28, 12)))
-          .cast("double").as("eff_tokens"))
+        Exact.sum($"weight" * $"n_toks").as("eff_tokens"))
       .select($"source", $"n_docs", $"n_tokens",
         round($"eff_tokens", 6).as("eff_tokens"),
         round(lit(1.0) - $"eff_tokens" / $"n_tokens", 6)
@@ -997,7 +995,7 @@ object Pipeline {
        |    ROUND(CAST(1.0 AS DOUBLE) / cc.cluster_size, 6) AS weight
        |  FROM t JOIN cc USING (doc_id)),
        |ag AS (SELECT source, COUNT(*) AS n_docs, SUM(n_toks) AS n_tokens,
-       |    CAST(SUM(CAST(weight * n_toks AS DECIMAL(28,12))) AS DOUBLE)
+       |    ${Exact.sumSql("weight * n_toks")}
        |      AS eff_tokens
        |  FROM j GROUP BY source)
        |SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
@@ -1449,7 +1447,7 @@ object Pipeline {
     val docs = Tables.documents(spark, dir)
     val base = docs.agg(count(lit(1)).as("n_docs"),
       sum($"n_chars").cast("long").as("total_chars"),
-      (sum($"n_chars".cast("decimal(28,6)")).cast("double")
+      (Exact.sum($"n_chars", 6)
         / count(lit(1))).as("mean_chars"))
     val nFp = docs
       .select(md5(lower(regexp_replace(trim($"text"), "\\s+", " "))).as("fp"))
@@ -1457,8 +1455,7 @@ object Pipeline {
     def gini(keyCol: String) = docs.groupBy(col(keyCol)).agg(count(lit(1)).as("c"))
       .agg(count(lit(1)).as(s"n_$keyCol"),
         sum($"c").as("tot"),
-        sum((($"c".cast("double") * $"c") .cast("double")).cast("decimal(28,2)"))
-          .cast("double").as("sumsq"))
+        Exact.sum(($"c".cast("double") * $"c").cast("double"), 2).as("sumsq"))
       .select(col(s"n_$keyCol"),
         round(lit(1.0) - $"sumsq" / ($"tot".cast("double") * $"tot"), 6)
           .as(s"${keyCol}_gini"))
@@ -1472,24 +1469,22 @@ object Pipeline {
   }
 
   val datasetCardSql: String =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-      |    CAST(SUM(CAST(n_chars AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*)
+      |    ${Exact.sumSql("n_chars", 6)} / COUNT(*)
       |      AS mean_chars
       |  FROM documents),
       |fp AS (
-      |  SELECT COUNT(DISTINCT md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))))
+      |  SELECT COUNT(DISTINCT md5(lower(regexp_replace(trim(text), '\\\\s+', ' ', 'g'))))
       |    AS n_unique
       |  FROM documents),
       |lg AS (
       |  SELECT COUNT(*) AS n_lang, SUM(c) AS tot,
-      |    CAST(SUM(CAST(CAST(CAST(c AS DOUBLE) * c AS DOUBLE)
-      |      AS DECIMAL(28,2))) AS DOUBLE) AS sumsq
+      |    ${Exact.sumSql("CAST(CAST(c AS DOUBLE) * c AS DOUBLE)", 2)} AS sumsq
       |  FROM (SELECT lang, COUNT(*) AS c FROM documents GROUP BY 1)),
       |sg AS (
       |  SELECT COUNT(*) AS n_source, SUM(c) AS tot,
-      |    CAST(SUM(CAST(CAST(CAST(c AS DOUBLE) * c AS DOUBLE)
-      |      AS DECIMAL(28,2))) AS DOUBLE) AS sumsq
+      |    ${Exact.sumSql("CAST(CAST(c AS DOUBLE) * c AS DOUBLE)", 2)} AS sumsq
       |  FROM (SELECT source, COUNT(*) AS c FROM documents GROUP BY 1))
       |SELECT n_docs, total_chars, ROUND(mean_chars, 6) AS mean_chars,
       |  ROUND(1.0 - CAST(n_unique AS DOUBLE) / n_docs, 6) AS dup_rate,
@@ -1614,15 +1609,13 @@ object Pipeline {
   private val QfMaxEpochs = 1.2
   def quotaFill(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column, s: Int = 6) =
-      sum(c.cast(s"decimal(28,$s)")).cast("double")
     val avail = Tables.documents(spark, dir)
       .select($"source",
         size(split(trim($"text"), "\\s+")).cast("long").as("tok"))
       .groupBy($"source").agg(sum($"tok").as("avail_tokens"))
     val w = avail.select($"source", $"avail_tokens",
       (h60($"source") % 7 + 1).cast("double").as("wt"))
-    val tot = broadcast(w.agg(dsum($"wt").as("sw"),
+    val tot = broadcast(w.agg(Exact.sum($"wt", 6).as("sw"),
       sum($"avail_tokens").cast("double").as("ta")))
     val base = w.crossJoin(tot)
       .select($"source", $"avail_tokens",
@@ -1631,8 +1624,8 @@ object Pipeline {
         (lit(QfMaxEpochs) * $"avail_tokens").as("cap"))
       .withColumn("alloc0", $"t_share" * $"budget")
       .withColumn("fin0", least($"alloc0", $"cap"))
-    val g = broadcast(base.agg(dsum($"fin0").as("sfin0"),
-      dsum(when($"fin0" < $"cap", $"t_share").otherwise(lit(0.0)), 12)
+    val g = broadcast(base.agg(Exact.sum($"fin0", 6).as("sfin0"),
+      Exact.sum(when($"fin0" < $"cap", $"t_share").otherwise(lit(0.0)))
         .as("hs")))
     base.crossJoin(g)
       .withColumn("fin1",
@@ -1660,7 +1653,7 @@ object Pipeline {
        |    CAST(${h60Sql("source")} % 7 + 1 AS DOUBLE) AS wt
        |  FROM a),
        |t AS (
-       |  SELECT CAST(SUM(CAST(wt AS DECIMAL(28,6))) AS DOUBLE) AS sw,
+       |  SELECT ${Exact.sumSql("wt", 6)} AS sw,
        |    CAST(SUM(avail_tokens) AS DOUBLE) AS ta
        |  FROM w),
        |b AS (
@@ -1673,7 +1666,7 @@ object Pipeline {
        |    LEAST(t_share * budget, cap) AS fin0
        |  FROM b),
        |g AS (
-       |  SELECT CAST(SUM(CAST(fin0 AS DECIMAL(28,6))) AS DOUBLE) AS sfin0,
+       |  SELECT ${Exact.sumSql("fin0", 6)} AS sfin0,
        |    CAST(SUM(CASE WHEN fin0 < cap
        |      THEN CAST(t_share AS DECIMAL(28,12))
        |      ELSE CAST(0.0 AS DECIMAL(28,12)) END) AS DOUBLE) AS hs

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Exact
 import graft.sources.Tables
 import TextAnalysis.{h60, h60Sql}
 
@@ -276,7 +277,7 @@ object Sampling {
     val w = per.select($"source", $"n_h", $"sx", $"sxx",
       ($"n_h".cast("double") * sd).as("wh"), sd.as("sd"))
     val tot = w.agg(
-      coalesce(sum($"wh".cast("decimal(28,12)")).cast("double"), lit(0.0))
+      coalesce(Exact.sum($"wh"), lit(0.0))
         .as("wsum"),
       coalesce(sum($"n_h"), lit(0L)).as("n_tot"))
     val share = when($"wsum" === 0,
@@ -307,7 +308,7 @@ object Sampling {
        |        / CAST(n_h * (n_h - 1) AS DOUBLE)) END AS sd
        |  FROM per),
        |tot AS (SELECT
-       |    COALESCE(CAST(SUM(CAST(wh AS DECIMAL(28,12))) AS DOUBLE), 0.0)
+       |    COALESCE(${Exact.sumSql("wh")}, 0.0)
        |      AS wsum,
        |    CAST(COALESCE(SUM(n_h), 0) AS BIGINT) AS n_tot FROM w),
        |x AS (SELECT w.*, wsum, n_tot,
@@ -389,7 +390,7 @@ object Sampling {
     docB.join(broadcast(lr), "b")
       .groupBy($"doc_id", $"lang", $"source")
       .agg(sum($"n").as("n_toks"),
-        round(sum(($"n" * $"lr").cast("decimal(28,12)")).cast("double"), 6)
+        round(Exact.sum($"n" * $"lr"), 6)
           .as("dsir_weight"))
       .orderBy($"dsir_weight".desc, $"doc_id".asc)
       .limit(DsirTopK)
@@ -424,7 +425,7 @@ object Sampling {
        |  CROSS JOIN totals),
        |wts AS (
        |  SELECT doc_id, lang, source, CAST(SUM(n) AS BIGINT) AS n_toks,
-       |    ROUND(CAST(SUM(CAST(n * lr AS DECIMAL(28,12))) AS DOUBLE), 6)
+       |    ROUND(${Exact.sumSql("n * lr")}, 6)
        |      AS dsir_weight
        |  FROM doc_b JOIN lr ON doc_b.b = lr.b
        |  GROUP BY 1, 2, 3),
@@ -518,7 +519,7 @@ object Sampling {
       .select($"rep", $"n_chars", w.cast("long").as("w"))
       .groupBy($"rep")
       .agg(sum($"w").cast("long").as("n_eff"),
-        round(sum(($"w" * $"n_chars").cast("decimal(28,6)")).cast("double")
+        round(Exact.sum($"w" * $"n_chars", 6)
           / sum($"w"), 6).as("mean_chars"))
       .orderBy($"rep")
   }
@@ -538,7 +539,7 @@ object Sampling {
        |uu AS (SELECT rep, n_chars, $u AS u FROM r),
        |ww AS (SELECT rep, n_chars, CAST($w AS BIGINT) AS w FROM uu)
        |SELECT rep, CAST(SUM(w) AS BIGINT) AS n_eff,
-       |  ROUND(CAST(SUM(CAST(w * n_chars AS DECIMAL(28,6))) AS DOUBLE)
+       |  ROUND(${Exact.sumSql("w * n_chars", 6)}
        |    / SUM(w), 6) AS mean_chars
        |FROM ww GROUP BY rep ORDER BY rep""".stripMargin
   }
@@ -673,9 +674,9 @@ object Sampling {
     val perSrc = ps.crossJoin(tot)
       .select($"source", $"n_docs", $"n_total", w.as("w"))
     val ess = broadcast(perSrc.agg(
-      sum(($"n_docs" * $"w").cast(DecimalType(28, 12))).cast("double")
+      Exact.sum($"n_docs" * $"w")
         .as("sum_w"),
-      sum(($"n_docs" * $"w" * $"w").cast(DecimalType(28, 12))).cast("double")
+      Exact.sum($"n_docs" * $"w" * $"w")
         .as("sum_w2")))
     perSrc.crossJoin(ess)
       .select($"source", $"n_docs", round($"w", 6).as("weight"),
@@ -687,7 +688,7 @@ object Sampling {
   }
 
   val sampleEssSql: String =
-    """WITH ps AS (
+    s"""WITH ps AS (
       |  SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source),
       |t AS (SELECT SUM(n_docs) AS n_total, COUNT(*) AS n_sources FROM ps),
       |pw AS (
@@ -696,9 +697,9 @@ object Sampling {
       |      / CAST(n_sources * n_docs AS DOUBLE), 0.25), 4.0) AS w
       |  FROM ps CROSS JOIN t),
       |e AS (
-      |  SELECT CAST(SUM(CAST(n_docs * w AS DECIMAL(28,12))) AS DOUBLE)
+      |  SELECT ${Exact.sumSql("n_docs * w")}
       |      AS sum_w,
-      |    CAST(SUM(CAST(n_docs * w * w AS DECIMAL(28,12))) AS DOUBLE)
+      |    ${Exact.sumSql("n_docs * w * w")}
       |      AS sum_w2
       |  FROM pw)
       |SELECT source, n_docs, ROUND(w, 6) AS weight,
@@ -740,10 +741,9 @@ object Sampling {
       .agg(
         sum(when($"raw" < lit(1.0) / $"clip" || $"raw" > $"clip", 1L)
           .otherwise(0L)).as("n_clipped"),
-        sum(($"n_docs" * $"w").cast(DecimalType(28, 12))).cast("double")
+        Exact.sum($"n_docs" * $"w")
           .as("sw"),
-        sum(($"n_docs" * $"w" * $"w").cast(DecimalType(28, 12)))
-          .cast("double").as("sw2"),
+        Exact.sum($"n_docs" * $"w" * $"w").as("sw2"),
         max($"n_total").as("nt"))
       .select($"clip", $"n_clipped", round($"sw", 6).as("sum_w"),
         round(($"sw" * $"sw") / $"sw2", 2).as("ess"),
@@ -752,7 +752,7 @@ object Sampling {
   }
 
   val sampleClipSweepSql: String =
-    """WITH ps AS (
+    s"""WITH ps AS (
       |  SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source),
       |t AS (SELECT SUM(n_docs) AS n_total, COUNT(*) AS n_sources FROM ps),
       |pw AS (
@@ -769,8 +769,8 @@ object Sampling {
       |  SELECT clip,
       |    CAST(SUM(CASE WHEN raw < 1.0 / clip OR raw > clip
       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped,
-      |    CAST(SUM(CAST(n_docs * w AS DECIMAL(28,12))) AS DOUBLE) AS sw,
-      |    CAST(SUM(CAST(n_docs * w * w AS DECIMAL(28,12))) AS DOUBLE)
+      |    ${Exact.sumSql("n_docs * w")} AS sw,
+      |    ${Exact.sumSql("n_docs * w * w")}
       |      AS sw2,
       |    MAX(n_total) AS nt
       |  FROM sw GROUP BY clip)
@@ -804,7 +804,7 @@ object Sampling {
           .as("w"))
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
-        sum($"w".cast(DecimalType(28, 12))).cast("double").as("eff"))
+        Exact.sum($"w").as("eff"))
       .select($"source", $"n_docs", round($"eff", 6).as("effective_docs"),
         round(lit(1.0) - $"eff" / $"n_docs".cast("double"), 6)
           .as("dedup_shrink"))
@@ -818,9 +818,9 @@ object Sampling {
        |    1.0 / CAST(COALESCE(c.cluster_size, 1) AS DOUBLE) AS w
        |  FROM documents d LEFT JOIN c ON d.doc_id = c.doc_id)
        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |  ROUND(CAST(SUM(CAST(w AS DECIMAL(28,12))) AS DOUBLE), 6)
+       |  ROUND(${Exact.sumSql("w")}, 6)
        |    AS effective_docs,
-       |  ROUND(1.0 - CAST(SUM(CAST(w AS DECIMAL(28,12))) AS DOUBLE)
+       |  ROUND(1.0 - ${Exact.sumSql("w")}
        |    / CAST(COUNT(*) AS DOUBLE), 6) AS dedup_shrink
        |FROM j GROUP BY source ORDER BY source""".stripMargin
 
@@ -920,16 +920,14 @@ object Sampling {
   // sum.
   def sampleDeff(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     val q = TextAnalysis.taQuality(spark, dir).select($"doc_id", $"quality")
     val src = Tables.documents(spark, dir).select($"doc_id", $"source")
       .join(q, "doc_id")
       .groupBy($"source")
-      .agg(count(lit(1)).as("ns"), dsum($"quality").as("sy"),
-        dsum($"quality" * $"quality").as("syy"))
+      .agg(count(lit(1)).as("ns"), Exact.sum($"quality").as("sy"),
+        Exact.sum($"quality" * $"quality").as("syy"))
     val g = src.agg(sum($"ns").as("n"),
-      dsum($"sy").as("gy"), dsum($"syy").as("gyy")).head()
+      Exact.sum($"sy").as("gy"), Exact.sum($"syy").as("gyy")).head()
     val n = g.getAs[Long]("n")
     if (n == 0L)
       return spark.createDataFrame(
@@ -939,46 +937,41 @@ object Sampling {
     val ybar = g.getAs[Double]("gy") / n.toDouble
     val varTotal = g.getAs[Double]("gyy") / n.toDouble - ybar * ybar
     val t = src.agg(
-      (sum(($"syy" - $"sy" * $"sy" / $"ns".cast("double"))
-        .cast("decimal(28,12)")).cast("double") / n.toDouble).as("vw"),
-      (sum(($"ns".cast("double")
+      (Exact.sum($"syy" - $"sy" * $"sy" / $"ns".cast("double")) / n.toDouble).as("vw"),
+      (Exact.sum($"ns".cast("double")
         * ($"sy" / $"ns".cast("double") - ybar)
-        * ($"sy" / $"ns".cast("double") - ybar))
-        .cast("decimal(28,12)")).cast("double") / n.toDouble).as("vb"),
+        * ($"sy" / $"ns".cast("double") - ybar)) / n.toDouble).as("vb"),
       count(lit(1)).as("n_sources")).head()
     val (vw, vb) = (t.getAs[Double]("vw"), t.getAs[Double]("vb"))
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     spark.createDataFrame(Seq((
-      n, t.getAs[Long]("n_sources"), r6(varTotal), r6(vw), r6(vb),
-      r6(if (varTotal == 0.0) 1.0 else vw / varTotal),
-      r6(if (varTotal == 0.0) 0.0 else vb / varTotal))))
+      n, t.getAs[Long]("n_sources"), Exact.round(varTotal, 6),
+      Exact.round(vw, 6), Exact.round(vb, 6),
+      Exact.round(if (varTotal == 0.0) 1.0 else vw / varTotal, 6),
+      Exact.round(if (varTotal == 0.0) 0.0 else vb / varTotal, 6))))
       .toDF("n", "n_sources", "var_total", "var_within", "var_between",
         "deff", "pct_explained")
   }
 
-  val sampleDeffSql: String = {
-    def d12(e: String) =
-      s"CAST(SUM(CAST(($e) AS DECIMAL(28,12))) AS DOUBLE)"
+  val sampleDeffSql: String =
     s"""WITH q AS (${TextAnalysis.taQualitySql}),
        |src AS (
        |  SELECT d.source, COUNT(*) AS ns,
-       |    ${d12("q.quality")} AS sy,
-       |    ${d12("q.quality * q.quality")} AS syy
+       |    ${Exact.sumSql("q.quality")} AS sy,
+       |    ${Exact.sumSql("q.quality * q.quality")} AS syy
        |  FROM documents d JOIN q ON d.doc_id = q.doc_id
        |  GROUP BY d.source),
        |g AS (
        |  SELECT CAST(SUM(ns) AS BIGINT) AS n,
-       |    ${d12("sy")} AS gy, ${d12("syy")} AS gyy,
+       |    ${Exact.sumSql("sy")} AS gy, ${Exact.sumSql("syy")} AS gyy,
        |    COUNT(*) AS n_sources
        |  FROM src),
        |m AS (
        |  SELECT g.n, g.n_sources,
        |    g.gy / g.n AS ybar,
        |    g.gyy / g.n - (g.gy / g.n) * (g.gy / g.n) AS var_total,
-       |    ${d12("src.syy - src.sy * src.sy / CAST(src.ns AS DOUBLE)")}
+       |    ${Exact.sumSql("src.syy - src.sy * src.sy / CAST(src.ns AS DOUBLE)")}
        |      / ANY_VALUE(g.n) AS vw,
-       |    ${d12("CAST(src.ns AS DOUBLE) * (src.sy / CAST(src.ns AS DOUBLE) - g.gy / g.n) * (src.sy / CAST(src.ns AS DOUBLE) - g.gy / g.n)")}
+       |    ${Exact.sumSql("CAST(src.ns AS DOUBLE) * (src.sy / CAST(src.ns AS DOUBLE) - g.gy / g.n) * (src.sy / CAST(src.ns AS DOUBLE) - g.gy / g.n)")}
        |      / ANY_VALUE(g.n) AS vb
        |  FROM src CROSS JOIN g
        |  GROUP BY g.n, g.n_sources, g.gy, g.gyy)
@@ -990,7 +983,6 @@ object Sampling {
        |  ROUND(CASE WHEN var_total = 0.0 THEN 0.0
        |    ELSE vb / var_total END, 6) AS pct_explained
        |FROM m""".stripMargin
-  }
 
   // --------------------------------------------------------------------
   // llm_sample_alloc_variance: estimator variance of the corpus quality
@@ -1009,17 +1001,15 @@ object Sampling {
   // n₀ and allocations kept as exact doubles of integer-derived values.
   def sampleAllocVariance(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     val q = TextAnalysis.taQuality(spark, dir).select($"doc_id", $"quality")
     val src = Tables.materialize(
       Tables.documents(spark, dir).select($"doc_id", $"source")
         .join(q, "doc_id")
         .groupBy($"source")
-        .agg(count(lit(1)).as("ns"), dsum($"quality").as("sy"),
-          dsum($"quality" * $"quality").as("syy")))
-    val g = src.agg(sum($"ns").as("n"), dsum($"sy").as("gy"),
-      dsum($"syy").as("gyy"), count(lit(1)).as("k")).head()
+        .agg(count(lit(1)).as("ns"), Exact.sum($"quality").as("sy"),
+          Exact.sum($"quality" * $"quality").as("syy")))
+    val g = src.agg(sum($"ns").as("n"), Exact.sum($"sy").as("gy"),
+      Exact.sum($"syy").as("gyy"), count(lit(1)).as("k")).head()
     val n = g.getAs[Long]("n")
     if (n < 10L)
       return spark.createDataFrame(Seq.empty[(String, Long, Double, Double)])
@@ -1036,42 +1026,36 @@ object Sampling {
       .select($"ns", $"vs", sqrt($"vs").as("sds"))
     val t = terms.agg(
       // proportional: Σ W_s²σ_s²/(n0·W_s) = Σ W_s·σ_s²/n0
-      dsum($"ns".cast("double") / n.toDouble * $"vs").as("propTerm"),
+      Exact.sum($"ns".cast("double") / n.toDouble * $"vs").as("propTerm"),
       // Neyman: (Σ W_s·σ_s)²/n0
-      dsum($"ns".cast("double") / n.toDouble * $"sds").as("neyTerm"),
+      Exact.sum($"ns".cast("double") / n.toDouble * $"sds").as("neyTerm"),
       // equal: Σ W_s²·σ_s²/(n0/K)
-      dsum(($"ns".cast("double") / n.toDouble)
+      Exact.sum(($"ns".cast("double") / n.toDouble)
         * ($"ns".cast("double") / n.toDouble) * $"vs").as("eqTerm")).head()
-    def r9(x: Double) =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val vSrs = varTotal / n0.toDouble
     val vProp = t.getAs[Double]("propTerm") / n0.toDouble
     val ney = t.getAs[Double]("neyTerm")
     val vNey = ney * ney / n0.toDouble
     val vEq = t.getAs[Double]("eqTerm") * k.toDouble / n0.toDouble
     spark.createDataFrame(Seq(
-      ("equal", n0, r9(vEq), r6(vSrs / vEq)),
-      ("neyman", n0, r9(vNey), r6(vSrs / vNey)),
-      ("proportional", n0, r9(vProp), r6(vSrs / vProp)),
-      ("srs", n0, r9(vSrs), r6(1.0))))
+      ("equal", n0, Exact.round(vEq, 9), Exact.round(vSrs / vEq, 6)),
+      ("neyman", n0, Exact.round(vNey, 9), Exact.round(vSrs / vNey, 6)),
+      ("proportional", n0, Exact.round(vProp, 9), Exact.round(vSrs / vProp, 6)),
+      ("srs", n0, Exact.round(vSrs, 9), Exact.round(1.0, 6))))
       .toDF("scheme", "n_budget", "var_mean", "rel_efficiency")
   }
 
-  val sampleAllocVarianceSql: String = {
-    def d12(e: String) =
-      s"CAST(SUM(CAST(($e) AS DECIMAL(28,12))) AS DOUBLE)"
+  val sampleAllocVarianceSql: String =
     s"""WITH q AS (${TextAnalysis.taQualitySql}),
        |src AS (
        |  SELECT d.source, COUNT(*) AS ns,
-       |    ${d12("q.quality")} AS sy,
-       |    ${d12("q.quality * q.quality")} AS syy
+       |    ${Exact.sumSql("q.quality")} AS sy,
+       |    ${Exact.sumSql("q.quality * q.quality")} AS syy
        |  FROM documents d JOIN q ON d.doc_id = q.doc_id
        |  GROUP BY d.source),
        |g AS (
        |  SELECT CAST(SUM(ns) AS BIGINT) AS n,
-       |    ${d12("sy")} AS gy, ${d12("syy")} AS gyy, COUNT(*) AS k
+       |    ${Exact.sumSql("sy")} AS gy, ${Exact.sumSql("syy")} AS gyy, COUNT(*) AS k
        |  FROM src),
        |terms AS (
        |  SELECT src.ns, g.n, g.k, g.gy, g.gyy,
@@ -1082,9 +1066,9 @@ object Sampling {
        |t AS (
        |  SELECT ANY_VALUE(n) AS n, ANY_VALUE(k) AS k,
        |    ANY_VALUE(gyy / n - (gy / n) * (gy / n)) AS var_total,
-       |    ${d12("CAST(ns AS DOUBLE) / CAST(n AS DOUBLE) * vs")} AS propTerm,
-       |    ${d12("CAST(ns AS DOUBLE) / CAST(n AS DOUBLE) * SQRT(vs)")} AS neyTerm,
-       |    ${d12("(CAST(ns AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(ns AS DOUBLE) / CAST(n AS DOUBLE)) * vs")} AS eqTerm
+       |    ${Exact.sumSql("CAST(ns AS DOUBLE) / CAST(n AS DOUBLE) * vs")} AS propTerm,
+       |    ${Exact.sumSql("CAST(ns AS DOUBLE) / CAST(n AS DOUBLE) * SQRT(vs)")} AS neyTerm,
+       |    ${Exact.sumSql("(CAST(ns AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(ns AS DOUBLE) / CAST(n AS DOUBLE)) * vs")} AS eqTerm
        |  FROM terms),
        |v AS (
        |  SELECT n // 10 AS n0,
@@ -1106,7 +1090,6 @@ object Sampling {
        |  UNION ALL
        |  SELECT 'srs', n0, vsrs, CAST(1.0 AS DOUBLE) FROM v)
        |ORDER BY scheme""".stripMargin
-  }
 
   // --------------------------------------------------------------------
   // llm_sample_ht: Horvitz–Thompson estimation from the systematic PPS
@@ -1133,7 +1116,7 @@ object Sampling {
       .agg(sum($"n_chars".cast("long")).as("tw"),
         count(lit(1)).as("n_docs")).filter($"n_docs" > 0)
     val trueTot = q
-      .agg(sum($"quality".cast(DecimalType(28, 12))).cast("double")
+      .agg(Exact.sum($"quality")
         .as("y_true"))
     // k-row table, three consumers (est, se, final) — materialized so
     // the PPS bucketed-cumsum pass runs once
@@ -1148,7 +1131,7 @@ object Sampling {
     val est = s.agg(
       sum($"n_hits").as("n_draws"),
       count(lit(1)).as("n_sampled_docs"),
-      (sum(($"n_hits" * $"yp").cast(DecimalType(28, 12))).cast("double")
+      (Exact.sum($"n_hits" * $"yp")
         / PpsK).as("y_ht"))
       .filter($"n_sampled_docs" > 0)
     val se = s.crossJoin(broadcast(est))
@@ -1169,7 +1152,7 @@ object Sampling {
     s"""WITH q AS (${TextAnalysis.taQualitySql}),
        |tw AS (SELECT CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS tw,
        |  COUNT(*) AS n_docs FROM documents HAVING COUNT(*) > 0),
-       |yt AS (SELECT CAST(SUM(CAST(quality AS DECIMAL(28,12))) AS DOUBLE)
+       |yt AS (SELECT ${Exact.sumSql("quality")}
        |  AS y_true FROM q),
        |pps AS ($samplePpsSql),
        |s AS (
@@ -1180,12 +1163,11 @@ object Sampling {
        |est AS (
        |  SELECT CAST(SUM(n_hits) AS BIGINT) AS n_draws,
        |    COUNT(*) AS n_sampled_docs,
-       |    CAST(SUM(CAST(n_hits * yp AS DECIMAL(28,12))) AS DOUBLE)
+       |    ${Exact.sumSql("n_hits * yp")}
        |      / $PpsK AS y_ht
        |  FROM s HAVING COUNT(*) > 0),
        |sev AS (
-       |  SELECT SQRT(CAST(SUM(CAST((s.yp - e.y_ht) * (s.yp - e.y_ht)
-       |      * s.n_hits AS DECIMAL(28,12))) AS DOUBLE)
+       |  SELECT SQRT(${Exact.sumSql("(s.yp - e.y_ht) * (s.yp - e.y_ht) * s.n_hits")}
        |    / ($PpsK * ${PpsK - 1})) AS se
        |  FROM s CROSS JOIN est e)
        |SELECT e.n_draws, CAST(e.n_sampled_docs AS BIGINT)
@@ -1230,7 +1212,7 @@ object Sampling {
       1.0 -> ((p: C) => p))
     alphas.map { case (a, f) =>
       val t = base.select($"source", $"p", f($"p").as("s"))
-      val z = t.agg(sum($"s".cast(DecimalType(28, 12))).cast("double")
+      val z = t.agg(Exact.sum($"s")
         .as("z"))
       // the per-term weight quantizes to DECIMAL(28,12) BEFORE the
       // division, exactly as it enters the normalizer sum
@@ -1238,7 +1220,7 @@ object Sampling {
         .select($"source", $"p",
           ($"s".cast(DecimalType(28, 12)).cast("double") / $"z").as("q"))
       val ent = q.agg(
-        sum((-$"q" * log($"q")).cast(DecimalType(15, 9))).cast("double")
+        Exact.sum(-$"q" * log($"q"), 9, 15)
           .as("ent"),
         max($"q").as("top"))
       q.crossJoin(broadcast(ent))
@@ -1259,17 +1241,15 @@ object Sampling {
          |  FROM (SELECT source, p,
          |      CAST($sExpr AS DECIMAL(28,12)) AS sdec FROM base) s
          |  CROSS JOIN (
-         |    SELECT CAST(SUM(CAST($sExpr AS DECIMAL(28,12))) AS DOUBLE)
+         |    SELECT ${Exact.sumSql(sExpr)}
          |      AS z FROM base) zz) q
          |CROSS JOIN (
          |  SELECT
-         |    CAST(SUM(CAST(-(CAST(sdec AS DOUBLE) / z)
-         |      * LN(CAST(sdec AS DOUBLE) / z) AS DECIMAL(15,9)))
-         |      AS DOUBLE) AS ent,
+         |    ${Exact.sumSql("-(CAST(sdec AS DOUBLE) / z) * LN(CAST(sdec AS DOUBLE) / z)", 9, 15)} AS ent,
          |    MAX(CAST(sdec AS DOUBLE) / z) AS top
          |  FROM (SELECT CAST($sExpr AS DECIMAL(28,12)) AS sdec FROM base) s2
          |  CROSS JOIN (
-         |    SELECT CAST(SUM(CAST($sExpr AS DECIMAL(28,12))) AS DOUBLE)
+         |    SELECT ${Exact.sumSql(sExpr)}
          |      AS z FROM base) zz2) e""".stripMargin
     val blocks = Seq(
       ("0.25", "SQRT(SQRT(p))"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Exact
 import graft.sources.Tables
 import TextAnalysis.h60Sql
 
@@ -877,7 +878,7 @@ object Similarity {
   private[llm] def kmUpdate(assigned: DataFrame): DataFrame =
     assigned.select(col("cid"), posexplode(col("v")).as(Seq("pos", "val")))
       .groupBy(col("cid"), col("pos"))
-      .agg((sum(col("val").cast("decimal(28,12)")).cast("double")
+      .agg((Exact.sum(col("val"))
         / count(lit(1))).as("m"))
       .groupBy(col("cid"))
       .agg(expr("transform(array_sort(collect_list(struct(pos, m))), s -> s.m)")
@@ -896,7 +897,7 @@ object Similarity {
   }
 
   val ssKmeansSql: String =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
       |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 4),
       |s1 AS (SELECT e.vec_id, e.v, c.cid,
       |    list_dot_product(e.v, e.v) - 2.0 * list_dot_product(e.v, c.cv)
@@ -907,7 +908,7 @@ object Similarity {
       |ex AS (SELECT cid, unnest(list_transform(range(0, len(v)),
       |    i -> {'pos': i, 'val': v[i+1]}), recursive := true) FROM a1),
       |means AS (SELECT cid, pos,
-      |    CAST(SUM(CAST(val AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS m
+      |    ${Exact.sumSql("val")} / COUNT(*) AS m
       |  FROM ex GROUP BY 1, 2),
       |c1 AS (SELECT cid, list(m ORDER BY pos) AS cv FROM means GROUP BY cid),
       |s2 AS (SELECT e.vec_id, c.cid,
@@ -974,7 +975,7 @@ object Similarity {
        |ex$n AS (SELECT cid, unnest(list_transform(range(0, len(v)),
        |    i -> {'pos': i, 'val': v[i+1]}), recursive := true) FROM a$n),
        |mn$n AS (SELECT cid, pos,
-       |    CAST(SUM(CAST(val AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS m
+       |    ${Exact.sumSql("val")} / COUNT(*) AS m
        |  FROM ex$n GROUP BY 1, 2),
        |c$n AS (SELECT cid, list(m ORDER BY pos) AS cv FROM mn$n GROUP BY cid)"""
       .stripMargin
@@ -1016,14 +1017,12 @@ object Similarity {
   def ssDimAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.functions.VecDot.register(spark)
-    def d12(c: org.apache.spark.sql.Column) =
-      sum(c.cast(DecimalType(28, 12))).cast("double")
     val ex = Tables.embeddings(spark, dir)
       .select($"vec_id", posexplode($"embedding".cast("array<double>"))
         .as(Seq("dim", "x")))
     val stats = Tables.materialize(ex.groupBy($"dim")
-      .agg(count(lit(1)).as("n"), d12($"x").as("sx"),
-        d12($"x" * $"x").as("sxx"),
+      .agg(count(lit(1)).as("n"), Exact.sum($"x").as("sx"),
+        Exact.sum($"x" * $"x").as("sxx"),
         min($"x").as("mn"), max($"x").as("mx"))
       .select($"dim", $"n",
         ($"sx" / $"n").as("mean"),
@@ -1031,7 +1030,7 @@ object Similarity {
           / ($"n".cast("double") * $"n".cast("double"))).as("variance"),
         $"mn", $"mx"))
     val tot = broadcast(stats.agg(
-      sum($"variance".cast(DecimalType(28, 12))).cast("double").as("tv")))
+      Exact.sum($"variance").as("tv")))
     stats.crossJoin(tot)
       .select($"dim", $"n", round($"mean", 6).as("mean"),
         round($"variance", 6).as("variance"),
@@ -1042,24 +1041,24 @@ object Similarity {
   }
 
   val ssDimAuditSql: String =
-    """WITH ex AS (
+    s"""WITH ex AS (
       |  SELECT unnest(list_transform(range(0, len(embedding::DOUBLE[])),
       |    i -> {'dim': i, 'x': (embedding::DOUBLE[])[i+1]}),
       |    recursive := true)
       |  FROM embeddings),
       |st AS MATERIALIZED (
       |  SELECT dim, COUNT(*) AS n,
-      |    CAST(SUM(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*)
+      |    ${Exact.sumSql("x")} / COUNT(*)
       |      AS mean,
       |    (CAST(COUNT(*) AS DOUBLE)
-      |        * CAST(SUM(CAST(x * x AS DECIMAL(28,12))) AS DOUBLE)
-      |      - CAST(SUM(CAST(x AS DECIMAL(28,12))) AS DOUBLE)
-      |        * CAST(SUM(CAST(x AS DECIMAL(28,12))) AS DOUBLE))
+      |        * ${Exact.sumSql("x * x")}
+      |      - ${Exact.sumSql("x")}
+      |        * ${Exact.sumSql("x")})
       |      / (CAST(COUNT(*) AS DOUBLE) * CAST(COUNT(*) AS DOUBLE))
       |      AS variance,
       |    MIN(x) AS mn, MAX(x) AS mx
       |  FROM ex GROUP BY dim),
-      |tv AS (SELECT CAST(SUM(CAST(variance AS DECIMAL(28,12))) AS DOUBLE)
+      |tv AS (SELECT ${Exact.sumSql("variance")}
       |  AS tv FROM st)
       |SELECT CAST(dim AS INT) AS dim, CAST(n AS BIGINT) AS n,
       |  ROUND(mean, 6) AS mean, ROUND(variance, 6) AS variance,
@@ -1088,8 +1087,7 @@ object Similarity {
     val norms = Tables.embeddings(spark, dir)
       .select($"vec_id", explode($"embedding").as("x"))
       .groupBy($"vec_id")
-      .agg(sum(($"x".cast("double") * $"x".cast("double"))
-        .cast(DecimalType(28, 12))).cast("double").as("n2"))
+      .agg(Exact.sum($"x".cast("double") * $"x".cast("double")).as("n2"))
       .select(sqrt($"n2").as("norm"))
     norms.agg(
       count(lit(1)).as("n_vecs"),
@@ -1097,17 +1095,17 @@ object Similarity {
       sum(when(abs($"norm" - 1.0) <= 0.01, 1L).otherwise(0L))
         .as("n_near_unit"),
       round(min($"norm"), 6).as("min_norm"),
-      round(sum($"norm".cast(DecimalType(15, 9))).cast("double")
+      round(Exact.sum($"norm", 9, 15)
         / count(lit(1)), 6).as("mean_norm"),
       round(max($"norm"), 6).as("max_norm"))
   }
 
   val ssNormAuditSql: String =
-    """WITH ex AS (
+    s"""WITH ex AS (
       |  SELECT vec_id, unnest(embedding::DOUBLE[]) AS x FROM embeddings),
       |nv AS (
       |  SELECT vec_id,
-      |    SQRT(CAST(SUM(CAST(x * x AS DECIMAL(28,12))) AS DOUBLE))
+      |    SQRT(${Exact.sumSql("x * x")})
       |      AS norm
       |  FROM ex GROUP BY vec_id)
       |SELECT COUNT(*) AS n_vecs,
@@ -1116,7 +1114,7 @@ object Similarity {
       |  CAST(SUM(CASE WHEN ABS(norm - 1.0) <= 0.01 THEN 1 ELSE 0 END)
       |    AS BIGINT) AS n_near_unit,
       |  ROUND(MIN(norm), 6) AS min_norm,
-      |  ROUND(CAST(SUM(CAST(norm AS DECIMAL(15,9))) AS DOUBLE)
+      |  ROUND(${Exact.sumSql("norm", 9, 15)}
       |    / COUNT(*), 6) AS mean_norm,
       |  ROUND(MAX(norm), 6) AS max_norm
       |FROM nv""".stripMargin
@@ -1188,9 +1186,8 @@ object Similarity {
     val ari = (sumComb.toDouble - expected) /
       ((aSum.toDouble + bSum.toDouble) / 2.0 - expected)
     spark.createDataFrame(Seq((n, nSame, sumComb, aSum, bSum,
-      BigDecimal(nSame.toDouble / n.toDouble)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(ari).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
+      Exact.round(nSame.toDouble / n.toDouble, 6),
+      Exact.round(ari, 6))))
       .toDF("n", "n_same", "sum_comb", "a_sum", "b_sum", "stay_frac", "ari")
   }
 
@@ -1382,10 +1379,10 @@ object Similarity {
           |  'cid', c.cid))).d2""".stripMargin).as("d2"))
     val stats = Tables.materialize(d2.groupBy($"s")
       .agg(count(lit(1)).as("n_vectors"),
-        sum($"d2".cast(DecimalType(28, 12))).cast("double").as("sd"),
+        Exact.sum($"d2").as("sd"),
         max($"d2").as("max_d2")))
     val tot = broadcast(stats.agg(
-      sum($"sd".cast(DecimalType(28, 12))).cast("double").as("td")))
+      Exact.sum($"sd").as("td")))
     stats.crossJoin(tot)
       .select($"s".cast("long").as("subspace"), $"n_vectors",
         round($"sd" / $"n_vectors", 6).as("mean_d2"),
@@ -1403,10 +1400,10 @@ object Similarity {
        |  FROM d) WHERE rn = 1),
        |st AS MATERIALIZED (
        |  SELECT s, COUNT(*) AS n_vectors,
-       |    CAST(SUM(CAST(d2 AS DECIMAL(28,12))) AS DOUBLE) AS sd,
+       |    ${Exact.sumSql("d2")} AS sd,
        |    MAX(d2) AS max_d2
        |  FROM dd GROUP BY s),
-       |t AS (SELECT CAST(SUM(CAST(sd AS DECIMAL(28,12))) AS DOUBLE) AS td
+       |t AS (SELECT ${Exact.sumSql("sd")} AS td
        |  FROM st)
        |SELECT CAST(s AS BIGINT) AS subspace, CAST(n_vectors AS BIGINT)
        |    AS n_vectors,
@@ -1468,12 +1465,10 @@ object Similarity {
       .select($"vec_id", explode(array((0 until PqSub).map(i =>
         struct(lit(i).as("s"), col(s"c$i").as("cid"))): _*)).as("x"))
       .select($"vec_id", $"x.s".as("s"), $"x.cid".as("cid"))
-    // DECIMAL(28,12) makes the 8-term sum order-insensitive, so the
-    // estimate is identical however the partial aggregation groups
     val est = codeLong.join(broadcast(adc), Seq("s", "cid"))
       .filter($"vec_id" =!= $"q_id")
       .groupBy($"q_id", $"vec_id")
-      .agg(round(sum($"d2".cast("decimal(28,12)")).cast("double"), 6)
+      .agg(round(Exact.sum($"d2"), 6)
         .as("est_d2"))
     val w = Window.partitionBy($"q_id").orderBy($"est_d2".asc, $"vec_id".asc)
     est.withColumn("rank", row_number().over(w))
@@ -1544,7 +1539,7 @@ object Similarity {
           .select($"s", $"best.cid".as("cid"),
             posexplode($"sub").as(Seq("pos", "val")))
           .groupBy($"s", $"cid", $"pos")
-          .agg((sum($"val".cast("decimal(28,12)")).cast("double")
+          .agg((Exact.sum($"val")
             / count(lit(1))).as("m"))
           .groupBy($"s", $"cid")
           .agg(expr("transform(array_sort(collect_list(struct(pos, m))), x -> x.m)")
@@ -1597,12 +1592,11 @@ object Similarity {
         struct(lit(i).as("s"), col(s"c$i").as("cid"))): _*)).as("x"))
       .select($"vec_id", $"x.s".as("s"), $"x.cid".as("cid"))
       .join(e.select($"vec_id", $"nrm"), "vec_id")
-    // DECIMAL(28,12) makes the 32-term sum order-insensitive; qn/nrm
-    // are constant per group, so max() is a deterministic pick
+    // qn/nrm are constant per group, so max() is a deterministic pick
     val est = codeLong.join(broadcast(adc), Seq("s", "cid"))
       .filter($"vec_id" =!= $"q_id")
       .groupBy($"q_id", $"vec_id")
-      .agg(round((sum($"dp".cast("decimal(28,12)")).cast("double")
+      .agg(round((Exact.sum($"dp")
         / (max($"qn") * max($"nrm"))), 6).as("est_cos"))
     val w = Window.partitionBy($"q_id").orderBy($"est_cos".desc, $"vec_id".asc)
     est.withColumn("rank", row_number().over(w))
@@ -1628,7 +1622,7 @@ object Similarity {
          |tex$r AS (SELECT s, cid, unnest(list_transform(range(0, len(sub)),
          |    i -> {'pos': i, 'val': sub[i+1]}), recursive := true) FROM ta$r),
          |tmn$r AS (SELECT s, cid, pos,
-         |    CAST(SUM(CAST(val AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS m
+         |    ${Exact.sumSql("val")} / COUNT(*) AS m
          |  FROM tex$r GROUP BY 1, 2, 3),
          |cb$r AS (SELECT s, cid, list(m ORDER BY pos) AS cv FROM tmn$r
          |  GROUP BY s, cid)""".stripMargin
@@ -1674,7 +1668,7 @@ object Similarity {
        |      cv) AS dp
        |  FROM q CROSS JOIN cb$PqTrainRounds cb),
        |est AS (SELECT q_id, cl.vec_id AS vec_id,
-       |    ROUND(CAST(SUM(CAST(dp AS DECIMAL(28,12))) AS DOUBLE)
+       |    ROUND(${Exact.sumSql("dp")}
        |      / (MAX(qn) * MAX(nn.nrm)), 6) AS est_cos
        |  FROM codes_tr cl JOIN adc ON cl.s = adc.s AND cl.code = adc.cid
        |  JOIN nn ON nn.vec_id = cl.vec_id
@@ -1695,7 +1689,7 @@ object Similarity {
        |      + list_dot_product(cv, cv) AS d2
        |  FROM q CROSS JOIN cb),
        |est AS (SELECT q_id, vec_id,
-       |    ROUND(CAST(SUM(CAST(d2 AS DECIMAL(28,12))) AS DOUBLE), 6) AS est_d2
+       |    ROUND(${Exact.sumSql("d2")}, 6) AS est_d2
        |  FROM codes_long cl JOIN adc ON cl.s = adc.s AND cl.code = adc.cid
        |  WHERE vec_id <> q_id
        |  GROUP BY q_id, vec_id),
@@ -1756,7 +1750,7 @@ object Similarity {
       .select($"q_id", $"vec_id", $"nrm", $"x.s".as("s"), $"x.cid".as("cid"))
     val est = candCodes.join(broadcast(adc), Seq("q_id", "s", "cid"))
       .groupBy($"q_id", $"vec_id")
-      .agg(round((sum($"dp".cast("decimal(28,12)")).cast("double")
+      .agg(round((Exact.sum($"dp")
         / (max($"qn") * max($"nrm"))), 6).as("est_cos"))
     val w = Window.partitionBy($"q_id").orderBy($"est_cos".desc, $"vec_id".asc)
     est.withColumn("rank", row_number().over(w))
@@ -1787,7 +1781,7 @@ object Similarity {
        |      cv) AS dp
        |  FROM q0 CROSS JOIN cb$PqTrainRounds cb),
        |est AS (SELECT c.q_id, c.vec_id,
-       |    ROUND(CAST(SUM(CAST(dp AS DECIMAL(28,12))) AS DOUBLE)
+       |    ROUND(${Exact.sumSql("dp")}
        |      / (MAX(qn) * MAX(c.nrm)), 6) AS est_cos
        |  FROM cand c
        |  JOIN codes_tr ct ON ct.vec_id = c.vec_id
@@ -1821,7 +1815,7 @@ object Similarity {
     // or the assign→update→assign chain re-runs twice
     val k = ssKmeans(spark, dir).localCheckpoint()
     val means = k.groupBy($"cid")
-      .agg((sum($"d2".cast("decimal(28,12)")).cast("double")
+      .agg((Exact.sum($"d2")
         / count(lit(1))).as("mean_d2"))
     k.join(broadcast(means), "cid")
       .select($"vec_id", $"cid", $"d2",
@@ -1833,7 +1827,7 @@ object Similarity {
   val ssOutliersSql: String =
     s"""WITH k AS ($ssKmeansSql),
        |m AS (SELECT cid,
-       |    CAST(SUM(CAST(d2 AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS mean_d2
+       |    ${Exact.sumSql("d2")} / COUNT(*) AS mean_d2
        |  FROM k GROUP BY cid)
        |SELECT vec_id, k.cid, d2, ROUND(d2 / mean_d2, 6) AS dist_ratio
        |FROM k JOIN m ON k.cid = m.cid
@@ -1908,13 +1902,13 @@ object Similarity {
       .select($"label", $"nrm", expr("transform(v, x -> x / nrm)").as("u"))
     val perLabel = u.groupBy($"label")
       .agg(count(lit(1)).as("n"),
-        sum($"nrm".cast("decimal(28,12)")).cast("double").as("snrm"))
+        Exact.sum($"nrm").as("snrm"))
     val gram = u
       .select($"label", posexplode($"u").as(Seq("pos", "x")))
       .groupBy($"label", $"pos")
-      .agg(sum($"x".cast("decimal(28,12)")).cast("double").as("s"))
+      .agg(Exact.sum($"x").as("s"))
       .groupBy($"label")
-      .agg(sum(($"s" * $"s").cast("decimal(28,12)")).cast("double").as("ss2"))
+      .agg(Exact.sum($"s" * $"s").as("ss2"))
     perLabel.join(gram, "label")
       .select($"label", $"n",
         round($"snrm" / $"n", 6).as("mean_norm"),
@@ -1930,15 +1924,15 @@ object Similarity {
        |u AS (SELECT label, nrm,
        |    list_transform(v, x -> x / nrm) AS u FROM n),
        |pl AS (SELECT label, COUNT(*) AS n,
-       |    CAST(SUM(CAST(nrm AS DECIMAL(28,12))) AS DOUBLE) AS snrm
+       |    ${Exact.sumSql("nrm")} AS snrm
        |  FROM u GROUP BY label),
        |ex AS (SELECT label, unnest(list_transform(range(0, len(u)),
        |    i -> {'pos': i, 'x': u[i + 1]})) AS w FROM u),
        |s AS (SELECT label, w.pos AS pos,
-       |    CAST(SUM(CAST(w.x AS DECIMAL(28,12))) AS DOUBLE) AS s
+       |    ${Exact.sumSql("w.x")} AS s
        |  FROM ex GROUP BY label, w.pos),
        |g AS (SELECT label,
-       |    CAST(SUM(CAST(s * s AS DECIMAL(28,12))) AS DOUBLE) AS ss2
+       |    ${Exact.sumSql("s * s")} AS ss2
        |  FROM s GROUP BY label)
        |SELECT pl.label AS label, CAST(pl.n AS BIGINT) AS n,
        |  ROUND(pl.snrm / pl.n, 6) AS mean_norm,
@@ -1964,7 +1958,7 @@ object Similarity {
       .select($"label", ($"vec_id" % 2).as("half"), posexplode($"v").as(Seq("pos", "x")))
       .groupBy($"label", $"half", $"pos")
       .agg(count(lit(1)).as("n"),
-        sum($"x".cast("decimal(28,12)")).cast("double").as("s"))
+        Exact.sum($"x").as("s"))
       .select($"label", $"half", $"pos", $"n", ($"s" / $"n").as("c"))
     val a = cent.filter($"half" === 0)
       .select($"label", $"pos", $"n".as("n_a"), $"c".as("ca"))
@@ -1973,9 +1967,9 @@ object Similarity {
     a.join(b, Seq("label", "pos"))
       .groupBy($"label")
       .agg(max($"n_a").as("n_a"), max($"n_b").as("n_b"),
-        sum(($"ca" * $"cb").cast("decimal(28,12)")).cast("double").as("dot"),
-        sum(($"ca" * $"ca").cast("decimal(28,12)")).cast("double").as("na2"),
-        sum(($"cb" * $"cb").cast("decimal(28,12)")).cast("double").as("nb2"))
+        Exact.sum($"ca" * $"cb").as("dot"),
+        Exact.sum($"ca" * $"ca").as("na2"),
+        Exact.sum($"cb" * $"cb").as("nb2"))
       .select($"label", $"n_a", $"n_b",
         round($"dot" / sqrt($"na2" * $"nb2"), 6).as("centroid_cosine"),
         round(sqrt($"nb2") / sqrt($"na2"), 6).as("norm_ratio"))
@@ -1989,7 +1983,7 @@ object Similarity {
        |      i -> {'pos': i, 'x': v[i + 1]})) AS u FROM n),
        |f AS (SELECT label, half, u.pos AS pos, u.x AS x FROM ex),
        |cent AS (SELECT label, half, pos, COUNT(*) AS n,
-       |    CAST(SUM(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS c
+       |    ${Exact.sumSql("x")} / COUNT(*) AS c
        |  FROM f GROUP BY label, half, pos),
        |j AS (
        |  SELECT a.label, a.n AS n_a, b.n AS n_b,
@@ -1998,9 +1992,9 @@ object Similarity {
        |  WHERE a.half = 0 AND b.half = 1),
        |ag AS (
        |  SELECT label, MAX(n_a) AS n_a, MAX(n_b) AS n_b,
-       |    CAST(SUM(CAST(ca * cb AS DECIMAL(28,12))) AS DOUBLE) AS dot,
-       |    CAST(SUM(CAST(ca * ca AS DECIMAL(28,12))) AS DOUBLE) AS na2,
-       |    CAST(SUM(CAST(cb * cb AS DECIMAL(28,12))) AS DOUBLE) AS nb2
+       |    ${Exact.sumSql("ca * cb")} AS dot,
+       |    ${Exact.sumSql("ca * ca")} AS na2,
+       |    ${Exact.sumSql("cb * cb")} AS nb2
        |  FROM j GROUP BY label)
        |SELECT label, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
        |  ROUND(dot / sqrt(na2 * nb2), 6) AS centroid_cosine,
@@ -2051,8 +2045,7 @@ object Similarity {
       .agg(count(lit(1)).as("n"),
         round(min($"mn"), 9).as("dim_min"),
         round(max($"mx"), 9).as("dim_max"),
-        round(sum(abs($"x" - $"deq").cast("decimal(28,12)"))
-          .cast("double") / count(lit(1)), 9).as("mean_abs_err"),
+        round(Exact.sum(abs($"x" - $"deq")) / count(lit(1)), 9).as("mean_abs_err"),
         round(max(abs($"x" - $"deq")), 9).as("max_abs_err"))
       .select($"pos".cast("long").as("pos"), $"n", $"dim_min", $"dim_max",
         $"mean_abs_err", $"max_abs_err")
@@ -2072,7 +2065,7 @@ object Similarity {
        |  FROM f JOIN rng USING (pos))
        |SELECT pos, COUNT(*) AS n,
        |  ROUND(MIN(mn), 9) AS dim_min, ROUND(MAX(mx), 9) AS dim_max,
-       |  ROUND(CAST(SUM(CAST(ABS(x - deq) AS DECIMAL(28,12))) AS DOUBLE)
+       |  ROUND(${Exact.sumSql("ABS(x - deq)")}
        |    / COUNT(*), 9) AS mean_abs_err,
        |  ROUND(MAX(ABS(x - deq)), 9) AS max_abs_err
        |FROM d GROUP BY pos ORDER BY pos""".stripMargin
@@ -2365,11 +2358,10 @@ object Similarity {
             * ($"smj".cast("double") / $"n_vec")).as("cv"))
     def matvec(vd: DataFrame): DataFrame =
       c.join(vd, "j").groupBy($"i")
-        .agg(sum(($"cv" * $"vj").cast("decimal(28,12)"))
-          .cast("double").as("w"))
+        .agg(Exact.sum($"cv" * $"vj").as("w"))
     def normalize(w: DataFrame): DataFrame = {
       val l = w.agg(
-        sqrt(sum(($"w" * $"w").cast("decimal(28,12)")).cast("double"))
+        sqrt(Exact.sum($"w" * $"w"))
           .as("l"))
       w.crossJoin(l).select($"i".as("j"),
         when($"l" === 0, lit(0.0)).otherwise($"w" / $"l").as("vj"),
@@ -2390,11 +2382,10 @@ object Similarity {
       "k -> {'pos': k, 'x': v[k + 1]}))"
     def w(r: Int, vPrev: String): String =
       s"""w$r AS (SELECT c.i,
-         |    CAST(SUM(CAST(c.cv * $vPrev AS DECIMAL(28,12))) AS DOUBLE)
+         |    ${Exact.sumSql(s"c.cv * $vPrev")}
          |      AS w
          |  FROM c ${if (r == 1) "" else s"JOIN v${r - 1} ON c.j = v${r - 1}.j "}GROUP BY c.i),
-         |l$r AS (SELECT sqrt(CAST(SUM(CAST(w * w AS DECIMAL(28,12)))
-         |    AS DOUBLE)) AS l FROM w$r),
+         |l$r AS (SELECT sqrt(${Exact.sumSql("w * w")}) AS l FROM w$r),
          |v$r AS (SELECT i AS j,
          |    CASE WHEN (SELECT l FROM l$r) = 0 THEN 0.0
          |      ELSE w / (SELECT l FROM l$r) END AS vj
@@ -2899,7 +2890,7 @@ object Similarity {
         (coalesce($"rel", lit(0L)).cast("double")
           / log(($"pos" + 1).cast("double"))).as("term"))
     val g = terms.groupBy($"method", $"q_id")
-      .agg(sum($"term".cast("decimal(28,12)")).cast("double").as("dcg"),
+      .agg(Exact.sum($"term").as("dcg"),
         sum(when($"rel" > 0L, 1L).otherwise(0L)).as("n_rel"))
     val grid = exact.select($"q_id").distinct()
       .crossJoin(Seq("lsh_probe", "ivf_probe", "pq_adc_trained", "sq8_asym")
@@ -2941,7 +2932,7 @@ object Similarity {
        |    ON a.q_id = e.q_id AND a.neighbor_id = e.neighbor_id),
        |g AS (
        |  SELECT method, q_id,
-       |    CAST(SUM(CAST(term AS DECIMAL(28,12))) AS DOUBLE) AS dcg,
+       |    ${Exact.sumSql("term")} AS dcg,
        |    SUM(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS n_rel
        |  FROM t GROUP BY 1, 2),
        |grid AS (
@@ -2985,7 +2976,7 @@ object Similarity {
         .as("bin"), $"cosine")
       .groupBy($"bin")
       .agg(count(lit(1)).as("n_pairs"),
-        round(sum($"cosine".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"cosine")
           / count(lit(1)), 6).as("mean_cosine"))
       .orderBy($"bin")
   }
@@ -2999,7 +2990,7 @@ object Similarity {
        |  FROM panel a JOIN panel b ON a.vec_id < b.vec_id)
        |SELECT LEAST(CAST(FLOOR((cosine + 1.0) * 20.0) AS INT), 39) AS bin,
        |  CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       |  ROUND(CAST(SUM(CAST(cosine AS DECIMAL(28,12))) AS DOUBLE)
+       |  ROUND(${Exact.sumSql("cosine")}
        |    / COUNT(*), 6) AS mean_cosine
        |FROM pr GROUP BY 1 ORDER BY 1""".stripMargin
 
@@ -3052,11 +3043,11 @@ object Similarity {
     // materialized so the corpus-scan rollup runs once
     val per = Tables.materialize(rows.groupBy($"cid")
       .agg(count(lit(1)).as("n"),
-        (sum($"a".cast(DecimalType(28, 12))).cast("double")
+        (Exact.sum($"a")
           / count(lit(1))).as("ma"),
-        sum($"s".cast(DecimalType(28, 12))).cast("double").as("ssum")))
+        Exact.sum($"s").as("ssum")))
     val glob = per.agg(
-      (sum($"ssum".cast(DecimalType(28, 12))).cast("double")
+      (Exact.sum($"ssum")
         / sum($"n")).as("gs"))
     per.crossJoin(broadcast(glob))
       .select($"cid", $"n", round($"ma", 6).as("mean_a"),
@@ -3080,11 +3071,11 @@ object Similarity {
        |  FROM ab),
        |per AS (
        |  SELECT cid, COUNT(*) AS n,
-       |    CAST(SUM(CAST(a AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS ma,
-       |    CAST(SUM(CAST(s AS DECIMAL(28,12))) AS DOUBLE) AS ssum
+       |    ${Exact.sumSql("a")} / COUNT(*) AS ma,
+       |    ${Exact.sumSql("s")} AS ssum
        |  FROM rows_ GROUP BY cid),
        |gl AS (
-       |  SELECT CAST(SUM(CAST(ssum AS DECIMAL(28,12))) AS DOUBLE)
+       |  SELECT ${Exact.sumSql("ssum")}
        |    / SUM(n) AS gs
        |  FROM per)
        |SELECT per.cid, CAST(per.n AS BIGINT) AS n,
@@ -3151,7 +3142,7 @@ object Similarity {
        |  FROM topk GROUP BY 1),
        |a AS (
        |  SELECT t.q_id, p.k, p.c1, p.ck, p.dk,
-       |    CAST(SUM(CAST(LN(t.d / p.dk) AS DECIMAL(28,12))) AS DOUBLE)
+       |    ${Exact.sumSql("LN(t.d / p.dk)")}
        |      AS lsum
        |  FROM topk t JOIN pq p ON t.q_id = p.q_id
        |  GROUP BY 1, 2, 3, 4, 5)

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Exact
 import graft.sources.Tables
 
 /** Text-analysis operators for a large-scale training-data pipeline,
@@ -350,7 +351,7 @@ object TextAnalysis {
     val docs = Tables.documents(spark, dir)
     val dl = docs.select($"doc_id", size(split($"text", " ")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
-      (sum($"dl".cast("decimal(28,6)")).cast("double")
+      (Exact.sum($"dl", 6)
         / count(lit(1))).as("avgdl"))
     val tf = docs
       .select($"doc_id", explode(split($"text", " ")).as("term"))
@@ -394,7 +395,7 @@ object TextAnalysis {
     s"""WITH dl AS (SELECT doc_id, len(string_split(text, ' ')) AS dl
        |  FROM documents),
        |stats AS (SELECT COUNT(*) AS n_docs,
-       |    CAST(SUM(CAST(dl AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS avgdl
+       |    ${Exact.sumSql("dl", 6)} / COUNT(*) AS avgdl
        |  FROM dl),
        |tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
        |  FROM documents),
@@ -735,7 +736,7 @@ object TextAnalysis {
       .agg(
         count(lit(1)).as("n_docs"),
         sum($"n_tokens".cast("long")).as("total_tokens"),
-        round(sum($"quality".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"quality")
           / count(lit(1)), 6).as("mean_quality"),
         sum(when($"quality" < 0.5, 1L).otherwise(0L)).as("n_low"))
       .withColumn("low_rate",
@@ -749,7 +750,7 @@ object TextAnalysis {
        |      FROM documents d JOIN q USING (doc_id))
        |SELECT source, COUNT(*) AS n_docs,
        |  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-       |  ROUND(CAST(SUM(CAST(quality AS DECIMAL(28,12))) AS DOUBLE)
+       |  ROUND(${Exact.sumSql("quality")}
        |    / COUNT(*), 6) AS mean_quality,
        |  CAST(SUM(CASE WHEN quality < 0.5 THEN 1 ELSE 0 END) AS BIGINT)
        |    AS n_low,
@@ -869,20 +870,20 @@ object TextAnalysis {
     toks.join(broadcast(probs), "term")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_toks"),
-        round(sum($"p".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"p")
           / count(lit(1)), 9).as("avg_p"))
       .orderBy($"doc_id")
   }
 
   val taLmScoreSql: String =
-    """WITH tk AS (
+    s"""WITH tk AS (
       |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
       |ct AS (SELECT term, COUNT(*) AS c FROM tk GROUP BY term),
       |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n_total FROM ct),
       |pr AS (SELECT term, CAST(c AS DOUBLE) / n_total AS p
       |  FROM ct CROSS JOIN tot)
       |SELECT doc_id, COUNT(*) AS n_toks,
-      |  ROUND(CAST(SUM(CAST(p AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*), 9)
+      |  ROUND(${Exact.sumSql("p")} / COUNT(*), 9)
       |    AS avg_p
       |FROM tk JOIN pr USING (term)
       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
@@ -927,13 +928,13 @@ object TextAnalysis {
     bg.join(broadcast(probs), Seq("w1", "w2"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
-        round(sum($"p".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"p")
           / count(lit(1)), 9).as("avg_p"))
       .orderBy($"doc_id")
   }
 
   val taLmBigramSql: String =
-    """WITH bg AS (
+    s"""WITH bg AS (
       |  SELECT doc_id,
       |    unnest(list_transform(range(0, len(t) - 1),
       |      i -> {'w1': t[i + 1], 'w2': t[i + 2]})) AS b
@@ -945,7 +946,7 @@ object TextAnalysis {
       |pr AS (SELECT w1, w2, CAST(c2 AS DOUBLE) / c1 AS p
       |  FROM c2 JOIN c1 USING (w1))
       |SELECT doc_id, COUNT(*) AS n_bigrams,
-      |  ROUND(CAST(SUM(CAST(p AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*), 9)
+      |  ROUND(${Exact.sumSql("p")} / COUNT(*), 9)
       |    AS avg_p
       |FROM f JOIN pr USING (w1, w2)
       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
@@ -998,13 +999,13 @@ object TextAnalysis {
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         sum($"backoff").as("n_backoff"),
-        round(sum($"p".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"p")
           / count(lit(1)), 9).as("avg_p"))
       .orderBy($"doc_id")
   }
 
   val taLmBigramBackoffSql: String =
-    """WITH bg AS (
+    s"""WITH bg AS (
       |  SELECT doc_id,
       |    unnest(list_transform(range(0, len(t) - 1),
       |      i -> {'w1': t[i + 1], 'w2': t[i + 2]})) AS b
@@ -1032,7 +1033,7 @@ object TextAnalysis {
       |  JOIN pu USING (w2))
       |SELECT doc_id, COUNT(*) AS n_bigrams,
       |  CAST(SUM(backoff) AS BIGINT) AS n_backoff,
-      |  ROUND(CAST(SUM(CAST(p AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*), 9)
+      |  ROUND(${Exact.sumSql("p")} / COUNT(*), 9)
       |    AS avg_p
       |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
@@ -1087,7 +1088,7 @@ object TextAnalysis {
         Seq("w1", "w2", "salt"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
-        round(sum($"p".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"p")
           / count(lit(1)), 9).as("avg_p"))
       .orderBy($"doc_id")
   }
@@ -1454,8 +1455,7 @@ object TextAnalysis {
       .groupBy($"doc_id", $"bucket")
       .agg(count(lit(1)).as("cnt"))
     val nrm = bux.groupBy($"doc_id")
-      .agg(sqrt(sum(($"cnt" * $"cnt").cast("decimal(28,12)"))
-        .cast("double")).as("l2"))
+      .agg(sqrt(Exact.sum($"cnt" * $"cnt")).as("l2"))
     bux.join(nrm, "doc_id")
       .select($"doc_id", $"bucket", $"cnt",
         round($"cnt" / $"l2", 9).as("weight"))
@@ -1470,7 +1470,7 @@ object TextAnalysis {
        |    CAST(COUNT(*) AS BIGINT) AS cnt
        |  FROM tk GROUP BY 1, 2),
        |n AS (SELECT doc_id,
-       |    SQRT(CAST(SUM(CAST(cnt * cnt AS DECIMAL(28,12))) AS DOUBLE))
+       |    SQRT(${Exact.sumSql("cnt * cnt")})
        |      AS l2
        |  FROM b GROUP BY doc_id)
        |SELECT b.doc_id, b.bucket, b.cnt,
@@ -2346,10 +2346,8 @@ object TextAnalysis {
     cats.groupBy($"facet")
       .agg(count(lit(1)).as("n_categories"),
         sum($"c").as("n_docs"),
-        sum(($"c".cast(DecimalType(38, 0)) * ($"c" - 1)).cast(DecimalType(38, 0)))
-          .cast("double").as("s2"),
-        sum(($"c".cast(DecimalType(38, 0)) * $"c").cast(DecimalType(38, 0)))
-          .cast("double").as("sq"))
+        Exact.sum($"c".cast(DecimalType(38, 0)) * ($"c" - 1), 0, 38).as("s2"),
+        Exact.sum($"c".cast(DecimalType(38, 0)) * $"c", 0, 38).as("sq"))
       .select($"facet", $"n_categories", $"n_docs",
         round(lit(1.0) - $"s2"
           / ($"n_docs".cast(DecimalType(38, 0))
@@ -2360,20 +2358,18 @@ object TextAnalysis {
   }
 
   val taSimpsonSql: String =
-    """WITH cats AS (
+    s"""WITH cats AS (
       |  SELECT facet, v, COUNT(*) AS c FROM (
       |    SELECT 'source' AS facet, source AS v FROM documents
       |    UNION ALL SELECT 'lang' AS facet, lang AS v FROM documents)
       |  GROUP BY 1, 2)
       |SELECT facet, COUNT(*) AS n_categories,
       |  CAST(SUM(c) AS BIGINT) AS n_docs,
-      |  ROUND(1.0 - CAST(SUM(CAST(CAST(c AS DECIMAL(38,0)) * (c - 1)
-      |      AS DECIMAL(38,0))) AS DOUBLE)
+      |  ROUND(1.0 - ${Exact.sumSql("CAST(c AS DECIMAL(38,0)) * (c - 1)", 0, 38)}
       |    / CAST(CAST(SUM(c) AS DECIMAL(38,0)) * (SUM(c) - 1) AS DOUBLE),
       |    6) AS simpson,
       |  ROUND(CAST(CAST(SUM(c) AS DECIMAL(38,0)) * SUM(c) AS DOUBLE)
-      |    / CAST(SUM(CAST(CAST(c AS DECIMAL(38,0)) * c AS DECIMAL(38,0)))
-      |      AS DOUBLE), 6) AS effective_categories
+      |    / ${Exact.sumSql("CAST(c AS DECIMAL(38,0)) * c", 0, 38)}, 6) AS effective_categories
       |FROM cats GROUP BY facet ORDER BY facet""".stripMargin
 
   // --------------------------------------------------------------------
@@ -2602,19 +2598,17 @@ object TextAnalysis {
     // c2 is the session-cached bigram-type artifact now (bounded by
     // observed bigram TYPES — replication-invariant in rows); it stays
     // pinned for its four sibling consumers, so no freeCheckpoint.
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     spark.createDataFrame(Seq((
       counts.getAs[Long]("n"), counts.getAs[Long]("types"),
       counts.getAs[Long]("prefixes"),
-      r6(hm), r6(hc), r6(hm - hc),
-      r6(if (hm == 0.0) 0.0 else 1.0 - hc / hm))))
+      Exact.round(hm, 6), Exact.round(hc, 6), Exact.round(hm - hc, 6),
+      Exact.round(if (hm == 0.0) 0.0 else 1.0 - hc / hm, 6))))
       .toDF("n_bigrams", "n_bigram_types", "n_prefix_types",
         "h_marginal", "h_conditional", "mutual_info", "redundancy")
   }
 
   val taBigramEntropySql: String =
-    """WITH bg AS (
+    s"""WITH bg AS (
       |  SELECT unnest(list_transform(range(0, len(t) - 1),
       |    i -> {'w1': t[i + 1], 'w2': t[i + 2]})) AS b
       |  FROM (SELECT string_split(text, ' ') AS t FROM documents)
@@ -2624,15 +2618,11 @@ object TextAnalysis {
       |c1 AS (SELECT w1, CAST(SUM(c2) AS BIGINT) AS c1 FROM c2 GROUP BY w1),
       |tot AS (SELECT CAST(SUM(c2) AS BIGINT) AS n FROM c2),
       |hc AS (
-      |  SELECT CAST(SUM(CAST(-(CAST(c2.c2 AS DOUBLE) / t.n)
-      |    * LN(CAST(c2.c2 AS DOUBLE) / c1.c1) AS DECIMAL(15,9)))
-      |    AS DOUBLE) AS h
+      |  SELECT ${Exact.sumSql("-(CAST(c2.c2 AS DOUBLE) / t.n) * LN(CAST(c2.c2 AS DOUBLE) / c1.c1)", 9, 15)} AS h
       |  FROM c2 JOIN c1 USING (w1) CROSS JOIN tot t),
       |cm AS (SELECT w2, CAST(SUM(c2) AS BIGINT) AS cw2 FROM c2 GROUP BY w2),
       |hm AS (
-      |  SELECT CAST(SUM(CAST(-(CAST(cw2 AS DOUBLE) / t.n)
-      |    * LN(CAST(cw2 AS DOUBLE) / t.n) AS DECIMAL(15,9)))
-      |    AS DOUBLE) AS h
+      |  SELECT ${Exact.sumSql("-(CAST(cw2 AS DOUBLE) / t.n) * LN(CAST(cw2 AS DOUBLE) / t.n)", 9, 15)} AS h
       |  FROM cm CROSS JOIN tot t),
       |k AS (
       |  SELECT CAST(SUM(c2) AS BIGINT) AS n, COUNT(*) AS types,

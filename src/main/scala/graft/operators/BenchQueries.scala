@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Exact
 import graft.sources.{BenchFixture, BenchIngest}
 
 /** Reference-surface queries (SURVEY.md §2) over the deterministic
@@ -316,7 +317,7 @@ object BenchQueries {
         min(col("key")).as("first_key"),
         max(col("key")).as("last_key"),
         sum(col("value.N")).as("sum_ns"),
-        round(sum(col("value.M").cast("decimal(18,6)")).cast("double"), 6)
+        round(Exact.sum(col("value.M"), 6, 18), 6)
           .as("sum_mbs"))
       .orderBy(col("rel_path"))
   }
@@ -328,7 +329,7 @@ object BenchQueries {
        |  MIN(strftime(date, '%d-%m-%Y')) AS first_key,
        |  MAX(strftime(date, '%d-%m-%Y')) AS last_key,
        |  CAST(SUM(ns_per_op) AS BIGINT) AS sum_ns,
-       |  ROUND(CAST(SUM(CAST(mb_per_s AS DECIMAL(18,6))) AS DOUBLE), 6)
+       |  ROUND(${Exact.sumSql("mb_per_s", 6, 18)}, 6)
        |    AS sum_mbs
        |FROM fct GROUP BY pkg, test ORDER BY rel_path""".stripMargin
 

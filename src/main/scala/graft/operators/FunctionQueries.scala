@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.Exact
 import graft.sources.Tables
 
 /** Scalar-function breadth (SURVEY.md §2.7: string / date / math /
@@ -181,17 +182,16 @@ object FunctionQueries {
       .join(broadcast(buckets), $"value" >= $"lo" && $"value" < $"hi")
       .groupBy($"bucket")
       .agg(count(lit(1)).as("n"),
-        sum($"value".cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-          .cast("double").as("sum_value"))
+        Exact.sum($"value", 6, 18).as("sum_value"))
       .orderBy($"bucket")
   }
 
   val q19Sql: String =
-    """WITH buckets(bucket, lo, hi) AS (VALUES
+    s"""WITH buckets(bucket, lo, hi) AS (VALUES
       |  ('low', 0.0, 50.0), ('mid', 50.0, 120.0),
       |  ('high', 120.0, 200.0), ('xhigh', 200.0, 1e9))
       |SELECT bucket, COUNT(*) AS n,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+      |  ${Exact.sumSql("value", 6, 18)} AS sum_value
       |FROM events JOIN buckets ON value >= lo AND value < hi
       |GROUP BY bucket ORDER BY bucket""".stripMargin
 
@@ -235,10 +235,10 @@ object FunctionQueries {
   def q21GroupingSets(spark: SparkSession, dir: String): DataFrame = {
     Tables.orders(spark, dir).createOrReplaceTempView("orders_v")
     spark.sql(
-      """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
+      s"""SELECT COALESCE(o_orderstatus, 'ALL') AS status,
         |  COALESCE(o_orderpriority, 'ALL') AS priority,
         |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+        |  ${Exact.sumSql("o_totalprice", 2, 18)} AS sum_price
         |FROM orders_v
         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
         |  (o_orderstatus, o_orderpriority))
@@ -246,10 +246,10 @@ object FunctionQueries {
   }
 
   val q21Sql: String =
-    """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
+    s"""SELECT COALESCE(o_orderstatus, 'ALL') AS status,
       |  COALESCE(o_orderpriority, 'ALL') AS priority,
       |  COUNT(*) AS n,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+      |  ${Exact.sumSql("o_totalprice", 2, 18)} AS sum_price
       |FROM orders
       |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
       |  (o_orderstatus, o_orderpriority))
@@ -300,11 +300,10 @@ object FunctionQueries {
   // order-insensitive and hash-exact.
   def q23SaltedAgg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val dec = org.apache.spark.sql.types.DecimalType(18, 6)
     Tables.events(spark, dir)
       .withColumn("salt", pmod(hash($"event_id"), lit(8)))
       .groupBy($"user_id", $"salt")
-      .agg(sum($"value".cast(dec)).as("part_sum"),
+      .agg(sum($"value".cast(org.apache.spark.sql.types.DecimalType(18, 6))).as("part_sum"),
         count(lit(1)).as("part_n"))
       .groupBy($"user_id")
       .agg(sum($"part_sum").cast("double").as("sum_value"),
@@ -313,8 +312,8 @@ object FunctionQueries {
   }
 
   val q23Sql: String =
-    """SELECT user_id,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
+    s"""SELECT user_id,
+      |  ${Exact.sumSql("value", 6, 18)} AS sum_value,
       |  COUNT(*) AS n
       |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
 
@@ -451,7 +450,6 @@ object FunctionQueries {
   // PRECEDING agree exactly. One shuffle on o_custkey.
   def q28WindowRange(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val dec = org.apache.spark.sql.types.DecimalType(18, 2)
     val w = Window.partitionBy($"o_custkey").orderBy($"day_n")
       .rangeBetween(-30, Window.currentRow)
     Tables.orders(spark, dir)
@@ -460,20 +458,20 @@ object FunctionQueries {
           lit(java.sql.Date.valueOf("1990-01-01"))).as("day_n"),
         $"o_totalprice")
       .withColumn("sum_30d",
-        sum($"o_totalprice".cast(dec)).over(w).cast("double"))
+        Exact.sumOver($"o_totalprice", w, 2, 18))
       .withColumn("n_30d", count(lit(1)).over(w))
       .select($"o_orderkey", $"o_custkey", $"day_n", $"sum_30d", $"n_30d")
       .orderBy($"o_orderkey")
   }
 
   val q28Sql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT o_orderkey, o_custkey,
       |    CAST(date_diff('day', DATE '1990-01-01', CAST(o_orderdate AS DATE)) AS INT) AS day_n,
       |    o_totalprice
       |  FROM orders)
       |SELECT o_orderkey, o_custkey, day_n,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_30d,
+      |  ${Exact.sumOverSql("o_totalprice", "w", 2, 18)} AS sum_30d,
       |  COUNT(*) OVER w AS n_30d
       |FROM t
       |WINDOW w AS (PARTITION BY o_custkey ORDER BY day_n
@@ -542,23 +540,23 @@ object FunctionQueries {
   def q31HavingSubq(spark: SparkSession, dir: String): DataFrame = {
     Tables.orders(spark, dir).createOrReplaceTempView("orders_v31")
     spark.sql(
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+      s"""SELECT o_orderpriority, COUNT(*) AS n,
+        |  ${Exact.sumSql("o_totalprice", 2, 18)} AS sum_price
         |FROM orders_v31
         |GROUP BY o_orderpriority
-        |HAVING CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) >
-        |  0.199 * (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |HAVING ${Exact.sumSql("o_totalprice", 2, 18)} >
+        |  0.199 * (SELECT ${Exact.sumSql("o_totalprice", 2, 18)}
         |          FROM orders_v31)
         |ORDER BY o_orderpriority""".stripMargin)
   }
 
   val q31Sql: String =
-    """SELECT o_orderpriority, COUNT(*) AS n,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+    s"""SELECT o_orderpriority, COUNT(*) AS n,
+      |  ${Exact.sumSql("o_totalprice", 2, 18)} AS sum_price
       |FROM orders
       |GROUP BY o_orderpriority
-      |HAVING CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) >
-      |  0.199 * (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+      |HAVING ${Exact.sumSql("o_totalprice", 2, 18)} >
+      |  0.199 * (SELECT ${Exact.sumSql("o_totalprice", 2, 18)}
       |          FROM orders)
       |ORDER BY o_orderpriority""".stripMargin
 

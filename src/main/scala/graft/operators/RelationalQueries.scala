@@ -5,34 +5,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Exact
 import graft.sources.Tables
 
 /** Star-schema relational operators (SURVEY.md §2.7 coverage matrix):
   * filters, projections, hash/broadcast/semi/anti joins, hash
   * aggregation, rollup/cube/grouping-sets, windows, top-k per group,
   * set ops, pivot/unpivot. Every query is deterministic (total ordering,
-  * exact decimal-summed doubles) so the driver's DuckDB hash-compare is
-  * stable.
-  *
-  * Determinism pattern for floating aggregation: per-row double
-  * arithmetic is bit-identical across engines (IEEE 754); we cast each
-  * row value to DECIMAL(18,s) (same nearest-decimal rounding in both
-  * engines), sum exactly in decimal, and cast the final sum back to
-  * double (one deterministic rounding). This removes the
-  * aggregation-order nondeterminism of double sums that would break a
-  * hash compare, at the cost of one decimal conversion per row.
-  * At 100 TB the same pattern holds: decimal sums still get map-side
-  * partial aggregation (Catalyst plans partial_sum/merge_sum).
+  * [[graft.Exact]] sums) so the DuckDB hash-compare is stable.
+  * The TPC-H money sums stay at DECIMAL(18, s), which Spark keeps in a
+  * long.
   */
 object RelationalQueries {
-
-  /** Exact double sum: cast to decimal, sum, cast back. */
-  private def dsum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(18, scale))).cast("double")
-
-  /** SQL twin of [[dsum]] for the DuckDB oracle. */
-  private def dsumSql(expr: String, scale: Int = 2): String =
-    s"CAST(SUM(CAST(($expr) AS DECIMAL(18,$scale))) AS DOUBLE)"
 
   // --------------------------------------------------------------------
   // q01: filter + hash-agg. TPC-H Q1 pattern — the reference's
@@ -45,20 +29,21 @@ object RelationalQueries {
       .filter($"l_shipdate" <= lit(java.sql.Timestamp.valueOf("1998-09-02 00:00:00")))
       .groupBy($"l_returnflag", $"l_linestatus")
       .agg(
-        dsum($"l_quantity").as("sum_qty"),
-        dsum($"l_extendedprice").as("sum_base_price"),
-        dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6).as("sum_disc_price"),
-        dsum($"l_extendedprice" * (lit(1.0) - $"l_discount") * (lit(1.0) + $"l_tax"), 6).as("sum_charge"),
+        Exact.sum($"l_quantity", 2, 18).as("sum_qty"),
+        Exact.sum($"l_extendedprice", 2, 18).as("sum_base_price"),
+        Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6, 18).as("sum_disc_price"),
+        Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount") * (lit(1.0) + $"l_tax"), 6, 18)
+          .as("sum_charge"),
         count(lit(1)).as("count_order"))
       .orderBy($"l_returnflag", $"l_linestatus")
   }
 
   val q01Sql: String =
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-      |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
-      |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
+    s"""SELECT l_returnflag, l_linestatus,
+      |  ${Exact.sumSql("l_quantity", 2, 18)} AS sum_qty,
+      |  ${Exact.sumSql("l_extendedprice", 2, 18)} AS sum_base_price,
+      |  ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 6, 18)} AS sum_disc_price,
+      |  ${Exact.sumSql("l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)", 6, 18)} AS sum_charge,
       |  COUNT(*) AS count_order
       |FROM lineitem
       |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -79,7 +64,7 @@ object RelationalQueries {
     import spark.implicits._
     val rev = Tables.lineitem(spark, dir)
       .groupBy($"l_returnflag", $"l_orderkey")
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6).as("revenue"))
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6, 18).as("revenue"))
     val local = Window.partitionBy($"l_returnflag", $"salt")
       .orderBy($"revenue".desc, $"l_orderkey".asc)
     val w = Window.partitionBy($"l_returnflag")
@@ -96,7 +81,7 @@ object RelationalQueries {
   val q02Sql: String =
     s"""WITH rev AS (
        |  SELECT l_returnflag, l_orderkey,
-       |    ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS revenue
+       |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 6, 18)} AS revenue
        |  FROM lineitem GROUP BY l_returnflag, l_orderkey),
        |rk AS (
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY l_returnflag
@@ -138,7 +123,7 @@ object RelationalQueries {
 
   val q03Sql: String =
     s"""SELECT c_custkey, c_name,
-       |  ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS revenue,
+       |  ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 6, 18)} AS revenue,
        |  COUNT(*) AS n_items
        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        |JOIN customer ON o_custkey = c_custkey
@@ -156,15 +141,15 @@ object RelationalQueries {
     l.join(broadcast(p), $"l_partkey" === $"p_partkey")
       .groupBy($"p_brand")
       .agg(count(lit(1)).as("n_items"),
-           dsum($"l_quantity").as("sum_qty"),
-           dsum($"l_extendedprice").as("sum_price"))
+           Exact.sum($"l_quantity", 2, 18).as("sum_qty"),
+           Exact.sum($"l_extendedprice", 2, 18).as("sum_price"))
       .orderBy($"p_brand")
   }
 
   val q04Sql: String =
     s"""SELECT p_brand, COUNT(*) AS n_items,
-       |  ${dsumSql("l_quantity")} AS sum_qty,
-       |  ${dsumSql("l_extendedprice")} AS sum_price
+       |  ${Exact.sumSql("l_quantity", 2, 18)} AS sum_qty,
+       |  ${Exact.sumSql("l_extendedprice", 2, 18)} AS sum_price
        |FROM lineitem JOIN part ON l_partkey = p_partkey
        |GROUP BY p_brand ORDER BY p_brand""".stripMargin
 
@@ -214,7 +199,7 @@ object RelationalQueries {
     import spark.implicits._
     Tables.lineitem(spark, dir)
       .rollup($"l_returnflag", $"l_linestatus")
-      .agg(count(lit(1)).as("n"), dsum($"l_quantity").as("sum_qty"))
+      .agg(count(lit(1)).as("n"), Exact.sum($"l_quantity", 2, 18).as("sum_qty"))
       .select(
         coalesce($"l_returnflag", lit("ALL")).as("returnflag"),
         coalesce($"l_linestatus", lit("ALL")).as("linestatus"),
@@ -225,7 +210,7 @@ object RelationalQueries {
   val q07Sql: String =
     s"""SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
        |  COALESCE(l_linestatus, 'ALL') AS linestatus,
-       |  COUNT(*) AS n, ${dsumSql("l_quantity")} AS sum_qty
+       |  COUNT(*) AS n, ${Exact.sumSql("l_quantity", 2, 18)} AS sum_qty
        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
        |ORDER BY returnflag, linestatus""".stripMargin
 
@@ -235,7 +220,7 @@ object RelationalQueries {
     import spark.implicits._
     Tables.orders(spark, dir)
       .cube($"o_orderstatus", $"o_orderpriority")
-      .agg(count(lit(1)).as("n"), dsum($"o_totalprice").as("sum_price"))
+      .agg(count(lit(1)).as("n"), Exact.sum($"o_totalprice", 2, 18).as("sum_price"))
       .select(
         coalesce($"o_orderstatus", lit("ALL")).as(("orderstatus")),
         coalesce($"o_orderpriority", lit("ALL")).as("orderpriority"),
@@ -246,7 +231,7 @@ object RelationalQueries {
   val q08Sql: String =
     s"""SELECT COALESCE(o_orderstatus, 'ALL') AS orderstatus,
        |  COALESCE(o_orderpriority, 'ALL') AS orderpriority,
-       |  COUNT(*) AS n, ${dsumSql("o_totalprice")} AS sum_price
+       |  COUNT(*) AS n, ${Exact.sumSql("o_totalprice", 2, 18)} AS sum_price
        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
        |ORDER BY orderstatus, orderpriority""".stripMargin
 
@@ -301,7 +286,7 @@ object RelationalQueries {
     import spark.implicits._
     val daily = Tables.events(spark, dir)
       .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(dsum($"value", 6).as("total"))
+      .agg(Exact.sum($"value", 6, 18).as("total"))
     val w = Window.partitionBy($"event_type").orderBy($"day")
     daily
       .withColumn("prev_total", lag($"total", 1).over(w))
@@ -313,7 +298,7 @@ object RelationalQueries {
   val q11Sql: String =
     s"""WITH daily AS (
        |  SELECT event_type, CAST(ts AS DATE) AS day,
-       |    ${dsumSql("value", 6)} AS total
+       |    ${Exact.sumSql("value", 6, 18)} AS total
        |  FROM events GROUP BY event_type, CAST(ts AS DATE))
        |SELECT event_type, day, total,
        |  LAG(total, 1) OVER (PARTITION BY event_type ORDER BY day) AS prev_total,
@@ -352,8 +337,8 @@ object RelationalQueries {
     Tables.lineitem(spark, dir)
       .groupBy($"l_returnflag")
       .agg(
-        dsum($"l_quantity").as("sum_qty"),
-        dsum($"l_extendedprice").as("sum_price"),
+        Exact.sum($"l_quantity", 2, 18).as("sum_qty"),
+        Exact.sum($"l_extendedprice", 2, 18).as("sum_price"),
         count(lit(1)).cast("double").as("n_rows"))
       .select($"l_returnflag",
         expr("stack(3, 'sum_qty', sum_qty, 'sum_price', sum_price, 'n_rows', n_rows) AS (metric, val)"))
@@ -362,8 +347,8 @@ object RelationalQueries {
 
   val q13Sql: String =
     s"""WITH agg AS (
-       |  SELECT l_returnflag, ${dsumSql("l_quantity")} AS sum_qty,
-       |    ${dsumSql("l_extendedprice")} AS sum_price,
+       |  SELECT l_returnflag, ${Exact.sumSql("l_quantity", 2, 18)} AS sum_qty,
+       |    ${Exact.sumSql("l_extendedprice", 2, 18)} AS sum_price,
        |    CAST(COUNT(*) AS DOUBLE) AS n_rows
        |  FROM lineitem GROUP BY l_returnflag)
        |SELECT l_returnflag, metric, val FROM (
@@ -422,7 +407,7 @@ object RelationalQueries {
               .cast(DecimalType(18, 6)))
           .otherwise(lit(0).cast(DecimalType(18, 6))))
           .cast("double").as("promo_rev"),
-        dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+        Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6, 18)
           .as("total_rev"),
         count(lit(1)).as("n_items"))
       .select($"ship_month",
@@ -438,7 +423,7 @@ object RelationalQueries {
        |    CAST(SUM(CASE WHEN p_type = 'PROMO'
        |      THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))
        |      ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE) AS promo_rev,
-       |    ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS total_rev,
+       |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 6, 18)} AS total_rev,
        |    COUNT(*) AS n_items
        |  FROM lineitem JOIN part ON l_partkey = p_partkey
        |  GROUP BY 1)
@@ -463,12 +448,12 @@ object RelationalQueries {
     import spark.implicits._
     val l = Tables.lineitem(spark, dir)
     val thresholds = l.groupBy($"l_partkey".as("t_partkey"))
-      .agg((sum($"l_quantity".cast(DecimalType(18, 2))).cast("double")
+      .agg((Exact.sum($"l_quantity", 2, 18)
         / count(lit(1))).as("avg_qty"))
     l.join(thresholds, $"l_partkey" === $"t_partkey")
       .filter($"l_quantity" < lit(0.2) * $"avg_qty")
       .agg(
-        (dsum($"l_extendedprice") / lit(7.0)).as("avg_yearly"),
+        (Exact.sum($"l_extendedprice", 2, 18) / lit(7.0)).as("avg_yearly"),
         count(lit(1)).as("n_small_lines"),
         countDistinct($"l_partkey").as("n_parts"))
       .select(round($"avg_yearly", 6).as("avg_yearly"),
@@ -478,11 +463,11 @@ object RelationalQueries {
   val q47Sql: String =
     s"""WITH t AS (
        |  SELECT l_partkey AS t_partkey,
-       |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
+       |    ${Exact.sumSql("l_quantity", 2, 18)} / COUNT(*)
        |      AS avg_qty
        |  FROM lineitem GROUP BY 1)
        |SELECT
-       |  ROUND(${dsumSql("l_extendedprice")} / 7.0, 6) AS avg_yearly,
+       |  ROUND(${Exact.sumSql("l_extendedprice", 2, 18)} / 7.0, 6) AS avg_yearly,
        |  COUNT(*) AS n_small_lines,
        |  COUNT(DISTINCT l_partkey) AS n_parts
        |FROM lineitem JOIN t ON l_partkey = t_partkey
@@ -568,7 +553,7 @@ object RelationalQueries {
               .cast(DecimalType(18, 6)))
           .otherwise(lit(0).cast(DecimalType(18, 6))))
           .cast("double").as("nation_rev"),
-        dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+        Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6, 18)
           .as("market_rev"),
         count(lit(1)).as("n_items"))
       .select($"order_year",
@@ -588,12 +573,12 @@ object RelationalQueries {
        |  ROUND(CAST(SUM(CASE WHEN supp_nation = 'NATION_0'
        |      THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))
        |      ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
-       |    / ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)}, 6)
+       |    / ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 6, 18)}, 6)
        |    AS mkt_share,
        |  CAST(SUM(CASE WHEN supp_nation = 'NATION_0'
        |      THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))
        |      ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE) AS nation_rev,
-       |  ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS market_rev,
+       |  ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 6, 18)} AS market_rev,
        |  COUNT(*) AS n_items
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
@@ -686,7 +671,7 @@ object RelationalQueries {
     import spark.implicits._
     val big = Tables.lineitem(spark, dir)
       .groupBy($"l_orderkey")
-      .agg(dsum($"l_quantity").as("total_qty"))
+      .agg(Exact.sum($"l_quantity", 2, 18).as("total_qty"))
       .filter($"total_qty" > 150.0)
     Tables.orders(spark, dir)
       .join(big, $"o_orderkey" === $"l_orderkey")
@@ -699,9 +684,9 @@ object RelationalQueries {
 
   val q52Sql: String =
     s"""WITH big AS (
-       |  SELECT l_orderkey, ${dsumSql("l_quantity")} AS total_qty
+       |  SELECT l_orderkey, ${Exact.sumSql("l_quantity", 2, 18)} AS total_qty
        |  FROM lineitem GROUP BY 1
-       |  HAVING ${dsumSql("l_quantity")} > 150.0)
+       |  HAVING ${Exact.sumSql("l_quantity", 2, 18)} > 150.0)
        |SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
        |  total_qty
        |FROM orders
@@ -767,7 +752,7 @@ object RelationalQueries {
     import spark.implicits._
     val cust = Tables.customer(spark, dir)
     val avgBal = broadcast(cust.filter($"c_acctbal" > 0)
-      .agg((sum($"c_acctbal".cast(DecimalType(18, 2))).cast("double")
+      .agg((Exact.sum($"c_acctbal", 2, 18)
         / count(lit(1))).as("avg_bal")))
     val recent = Tables.orders(spark, dir)
       .filter($"o_orderdate" >= lit(java.sql.Timestamp.valueOf("2000-01-01 00:00:00")))
@@ -778,17 +763,17 @@ object RelationalQueries {
       .join(broadcast(Tables.nation(spark, dir)
         .select($"n_nationkey", $"n_name")), $"c_nationkey" === $"n_nationkey")
       .groupBy($"n_name".as("cust_nation"))
-      .agg(count(lit(1)).as("n_idle"), dsum($"c_acctbal").as("idle_capital"))
+      .agg(count(lit(1)).as("n_idle"), Exact.sum($"c_acctbal", 2, 18).as("idle_capital"))
       .orderBy($"cust_nation")
   }
 
   val q54Sql: String =
     s"""WITH t AS (
-       |  SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
+       |  SELECT ${Exact.sumSql("c_acctbal", 2, 18)}
        |    / COUNT(*) AS avg_bal
        |  FROM customer WHERE c_acctbal > 0)
        |SELECT n_name AS cust_nation, COUNT(*) AS n_idle,
-       |  ${dsumSql("c_acctbal")} AS idle_capital
+       |  ${Exact.sumSql("c_acctbal", 2, 18)} AS idle_capital
        |FROM customer, t
        |JOIN nation ON c_nationkey = n_nationkey
        |WHERE c_acctbal > avg_bal
@@ -822,14 +807,14 @@ object RelationalQueries {
       .join(broadcast(supp),
         $"l_suppkey" === $"s_suppkey" && $"c_nationkey" === $"s_nationkey")
       .groupBy($"n_name".as("nation"))
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6, 18)
         .as("revenue"), count(lit(1)).as("n_lines"))
       .orderBy($"revenue".desc, $"nation")
   }
 
   val q55Sql: String =
     s"""SELECT n_name AS nation,
-       |  ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS revenue,
+       |  ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 6, 18)} AS revenue,
        |  COUNT(*) AS n_lines
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
@@ -869,7 +854,7 @@ object RelationalQueries {
         && $"cust_nation".isin("NATION_0", "NATION_1", "NATION_2", "NATION_3"))
       .groupBy($"supp_nation", $"cust_nation",
         year($"l_shipdate").cast("int").as("ship_year"))
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6, 18)
         .as("revenue"), count(lit(1)).as("n_lines"))
       .orderBy($"supp_nation", $"cust_nation", $"ship_year")
   }
@@ -883,7 +868,7 @@ object RelationalQueries {
        |  JOIN nation ON s_nationkey = n_nationkey)
        |SELECT supp_nation, cust_nation,
        |  CAST(year(l_shipdate) AS INT) AS ship_year,
-       |  ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS revenue,
+       |  ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 6, 18)} AS revenue,
        |  COUNT(*) AS n_lines
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
@@ -915,8 +900,8 @@ object RelationalQueries {
       .join(broadcast(supp), $"l_suppkey" === $"s_suppkey")
       .join(Tables.orders(spark, dir), $"l_orderkey" === $"o_orderkey")
       .groupBy($"supp_nation", year($"o_orderdate").cast("int").as("o_year"))
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")
-          - $"p_retailprice" * $"l_quantity" * lit(0.1), 6).as("profit"),
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount")
+          - $"p_retailprice" * $"l_quantity" * lit(0.1), 6, 18).as("profit"),
         count(lit(1)).as("n_lines"))
       .orderBy($"supp_nation", $"o_year".desc)
   }
@@ -926,9 +911,7 @@ object RelationalQueries {
        |  SELECT s_suppkey, n_name AS supp_nation FROM supplier
        |  JOIN nation ON s_nationkey = n_nationkey)
        |SELECT supp_nation, CAST(year(o_orderdate) AS INT) AS o_year,
-       |  ${dsumSql(
-        "l_extendedprice * (1.0 - l_discount) - p_retailprice * l_quantity * 0.1",
-        6)} AS profit,
+       |  ${Exact.sumSql("l_extendedprice * (1.0 - l_discount) - p_retailprice * l_quantity * 0.1", 6, 18)} AS profit,
        |  COUNT(*) AS n_lines
        |FROM lineitem
        |JOIN part ON l_partkey = p_partkey AND p_name LIKE '%widget%'
@@ -955,7 +938,7 @@ object RelationalQueries {
           && $"o_orderdate" < lit(java.sql.Timestamp.valueOf("2001-01-01 00:00:00"))),
         $"l_orderkey" === $"o_orderkey")
       .groupBy($"o_custkey")
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6, 18)
         .as("revenue"), count(lit(1)).as("n_returned"))
     rev
       .join(Tables.customer(spark, dir), $"o_custkey" === $"c_custkey")
@@ -970,7 +953,7 @@ object RelationalQueries {
   val q58Sql: String =
     s"""WITH rev AS (
        |  SELECT o_custkey,
-       |    ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS revenue,
+       |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 6, 18)} AS revenue,
        |    COUNT(*) AS n_returned
        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        |  WHERE l_returnflag = 'R'
@@ -1069,13 +1052,12 @@ object RelationalQueries {
           .as("share_pct"))
       .groupBy($"nation")
       .agg(count(lit(1)).as("n_suppliers"),
-        round(sum(($"share_pct" * $"share_pct").cast(DecimalType(18, 8)))
-          .cast("double"), 6).as("hhi"))
+        round(Exact.sum($"share_pct" * $"share_pct", 8, 18), 6).as("hhi"))
       .orderBy($"hhi".desc, $"nation")
   }
 
   val q60Sql: String =
-    """WITH sn AS (
+    s"""WITH sn AS (
       |  SELECT s_suppkey, n_name AS nation FROM supplier
       |  JOIN nation ON s_nationkey = n_nationkey),
       |rev AS (
@@ -1091,8 +1073,7 @@ object RelationalQueries {
       |      AS share_pct
       |  FROM rev r JOIN nt ON r.nation = nt.nation)
       |SELECT nation, COUNT(*) AS n_suppliers,
-      |  ROUND(CAST(SUM(CAST(share_pct * share_pct AS DECIMAL(18,8)))
-      |    AS DOUBLE), 6) AS hhi
+      |  ROUND(${Exact.sumSql("share_pct * share_pct", 8, 18)}, 6) AS hhi
       |FROM sh GROUP BY 1 ORDER BY hhi DESC, nation""".stripMargin
 
   // --------------------------------------------------------------------
@@ -1177,7 +1158,7 @@ object RelationalQueries {
       .groupBy($"cohort_q", ($"q_idx" - $"cohort_q").as("quarters_since"))
       .agg(countDistinct($"o_custkey").as("n_active"),
         count(lit(1)).as("n_orders"),
-        dsum($"o_totalprice").as("revenue"))
+        Exact.sum($"o_totalprice", 2, 18).as("revenue"))
       .orderBy($"cohort_q", $"quarters_since")
   }
 
@@ -1192,7 +1173,7 @@ object RelationalQueries {
        |SELECT cohort_q, q_idx - cohort_q AS quarters_since,
        |  COUNT(DISTINCT o_custkey) AS n_active,
        |  COUNT(*) AS n_orders,
-       |  ${dsumSql("o_totalprice")} AS revenue
+       |  ${Exact.sumSql("o_totalprice", 2, 18)} AS revenue
        |FROM o JOIN fq ON o_custkey = fc_cust
        |GROUP BY 1, 2 ORDER BY cohort_q, quarters_since""".stripMargin
 
@@ -1472,15 +1453,14 @@ object RelationalQueries {
       .join(broadcast(tot), "segment")
       .groupBy($"segment")
       .agg(first($"n_gaps").as("n_gaps"),
-        round(sum(($"gap_days" * $"c").cast(DecimalType(28, 6)))
-          .cast("double") / first($"n_gaps"), 6).as("mean_gap"),
+        round(Exact.sum($"gap_days" * $"c", 6) / first($"n_gaps"), 6).as("mean_gap"),
         min(when($"cum" * 2 >= $"n_gaps", $"gap_days")).as("median_gap"),
         min(when($"cum" * 10 >= $"n_gaps" * 9, $"gap_days")).as("p90_gap"))
       .orderBy($"segment")
   }
 
   val q67Sql: String =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT c_mktsegment AS segment,
       |    date_diff('day',
       |      LAG(o_orderdate) OVER (PARTITION BY o_custkey
@@ -1497,7 +1477,7 @@ object RelationalQueries {
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
       |  FROM h JOIN t ON h.segment = t.segment)
       |SELECT segment, CAST(MIN(n_gaps) AS BIGINT) AS n_gaps,
-      |  ROUND(CAST(SUM(CAST(gap_days * c AS DECIMAL(28,6))) AS DOUBLE)
+      |  ROUND(${Exact.sumSql("gap_days * c", 6)}
       |    / MIN(n_gaps), 6) AS mean_gap,
       |  MIN(CASE WHEN cum * 2 >= n_gaps THEN gap_days END) AS median_gap,
       |  MIN(CASE WHEN cum * 10 >= n_gaps * 9 THEN gap_days END) AS p90_gap
@@ -1526,7 +1506,7 @@ object RelationalQueries {
     val cost = Tables.lineitem(spark, dir)
       .join(broadcast(supp.select($"s_suppkey".as("k"))), $"l_suppkey" === $"k")
       .groupBy($"l_partkey", $"l_suppkey")
-      .agg((dsum($"l_extendedprice", 6) / dsum($"l_quantity", 6))
+      .agg((Exact.sum($"l_extendedprice", 6, 18) / Exact.sum($"l_quantity", 6, 18))
         .as("unit_cost"))
     val w = Window.partitionBy($"l_partkey")
       .orderBy($"unit_cost", $"l_suppkey")
@@ -1551,7 +1531,7 @@ object RelationalQueries {
        |  WHERE r_name = 'EUROPE'),
        |cost AS (
        |  SELECT l_partkey, l_suppkey,
-       |    ${dsumSql("l_extendedprice", 6)} / ${dsumSql("l_quantity", 6)}
+       |    ${Exact.sumSql("l_extendedprice", 6, 18)} / ${Exact.sumSql("l_quantity", 6, 18)}
        |      AS unit_cost
        |  FROM lineitem JOIN supp ON l_suppkey = s_suppkey
        |  GROUP BY 1, 2),
@@ -1645,7 +1625,7 @@ object RelationalQueries {
     import spark.implicits._
     val cust = Tables.customer(spark, dir)
     val avgPos = broadcast(cust.filter($"c_acctbal" > 0.0)
-      .agg((dsum($"c_acctbal", 6) / count(lit(1))).as("avg_bal")))
+      .agg((Exact.sum($"c_acctbal", 6, 18) / count(lit(1))).as("avg_bal")))
     val active = Tables.orders(spark, dir)
       .filter($"o_orderdate" >= lit(java.sql.Timestamp.valueOf("2000-01-01 00:00:00")))
       .select($"o_custkey").distinct()
@@ -1657,18 +1637,18 @@ object RelationalQueries {
         .select($"n_nationkey", $"n_name")), $"c_nationkey" === $"n_nationkey")
       .groupBy($"n_name".as("nation"))
       .agg(count(lit(1)).as("n_custs"),
-        round(dsum($"c_acctbal", 6), 2).as("total_bal"))
+        round(Exact.sum($"c_acctbal", 6, 18), 2).as("total_bal"))
       .orderBy($"nation")
   }
 
   val q70Sql: String =
     s"""WITH avg_pos AS (
-       |  SELECT ${dsumSql("c_acctbal", 6)} / COUNT(*) AS avg_bal
+       |  SELECT ${Exact.sumSql("c_acctbal", 6, 18)} / COUNT(*) AS avg_bal
        |  FROM customer WHERE c_acctbal > 0),
        |active AS (SELECT DISTINCT o_custkey FROM orders
        |  WHERE o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
        |SELECT n_name AS nation, CAST(COUNT(*) AS BIGINT) AS n_custs,
-       |  ROUND(${dsumSql("c_acctbal", 6)}, 2) AS total_bal
+       |  ROUND(${Exact.sumSql("c_acctbal", 6, 18)}, 2) AS total_bal
        |FROM customer CROSS JOIN avg_pos
        |JOIN nation ON c_nationkey = n_nationkey
        |WHERE c_acctbal > avg_bal
@@ -1705,15 +1685,14 @@ object RelationalQueries {
       .join(broadcast(tot), "priority")
       .groupBy($"priority")
       .agg(first($"n_lines").as("n_lines"),
-        round(sum(($"lag_days" * $"c").cast(DecimalType(28, 6)))
-          .cast("double") / first($"n_lines"), 6).as("mean_lag"),
+        round(Exact.sum($"lag_days" * $"c", 6) / first($"n_lines"), 6).as("mean_lag"),
         min(when($"cum" * 2 >= $"n_lines", $"lag_days")).as("median_lag"),
         min(when($"cum" * 20 >= $"n_lines" * 19, $"lag_days")).as("p95_lag"))
       .orderBy($"priority")
   }
 
   val q71Sql: String =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT o_orderpriority AS priority,
       |    date_diff('day', o_orderdate, l_shipdate) AS lag_days
       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -1725,7 +1704,7 @@ object RelationalQueries {
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
       |  FROM h JOIN t ON h.priority = t.priority)
       |SELECT priority, CAST(MIN(n_lines) AS BIGINT) AS n_lines,
-      |  ROUND(CAST(SUM(CAST(lag_days * c AS DECIMAL(28,6))) AS DOUBLE)
+      |  ROUND(${Exact.sumSql("lag_days * c", 6)}
       |    / MIN(n_lines), 6) AS mean_lag,
       |  MIN(CASE WHEN cum * 2 >= n_lines THEN lag_days END) AS median_lag,
       |  MIN(CASE WHEN cum * 20 >= n_lines * 19 THEN lag_days END) AS p95_lag
@@ -1747,10 +1726,10 @@ object RelationalQueries {
     val cut = lit(java.sql.Timestamp.valueOf("1998-01-01 00:00:00"))
     val o = Tables.orders(spark, dir)
     val early = o.filter($"o_orderdate" < cut)
-      .groupBy($"o_custkey").agg(dsum($"o_totalprice").as("early_rev"))
+      .groupBy($"o_custkey").agg(Exact.sum($"o_totalprice", 2, 18).as("early_rev"))
     val late = o.filter($"o_orderdate" >= cut)
       .groupBy($"o_custkey".as("lk"))
-      .agg(dsum($"o_totalprice").as("late_rev"))
+      .agg(Exact.sum($"o_totalprice", 2, 18).as("late_rev"))
     // ONE materialization job: the checkpointed customer-grain join
     // feeds the rank helper AND the grand totals (the decile column is
     // irrelevant to the sums), so the decile table is referenced once.
@@ -1762,17 +1741,16 @@ object RelationalQueries {
     val deciled = BucketedRank.ntileDesc(joined, "early_rev", "o_custkey", 10,
       "decile", materialized = true)
     val totals = broadcast(joined.agg(
-      sum($"early_rev".cast(DecimalType(28, 6))).cast("double").as("te"),
-      sum($"late_rev".cast(DecimalType(28, 6))).cast("double").as("tl")))
+      Exact.sum($"early_rev", 6).as("te"),
+      Exact.sum($"late_rev", 6).as("tl")))
     val perDecile = deciled.groupBy($"decile")
       .agg(count(lit(1)).as("n_custs"),
-        sum($"early_rev".cast(DecimalType(28, 6))).cast("double").as("de"),
-        sum($"late_rev".cast(DecimalType(28, 6))).cast("double").as("dl"))
+        Exact.sum($"early_rev", 6).as("de"),
+        Exact.sum($"late_rev", 6).as("dl"))
     val wCum = Window.orderBy($"decile")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     perDecile.crossJoin(totals)
-      .withColumn("cum_dl", sum($"dl".cast(DecimalType(28, 6)))
-        .over(wCum).cast("double"))
+      .withColumn("cum_dl", Exact.sumOver($"dl", wCum, 6))
       .select($"decile", $"n_custs",
         round($"de" / $"te", 6).as("early_share"),
         round($"dl" / $"tl", 6).as("late_share"),
@@ -1782,11 +1760,11 @@ object RelationalQueries {
 
   val q72Sql: String =
     s"""WITH e AS (
-       |  SELECT o_custkey, ${dsumSql("o_totalprice")} AS early_rev
+       |  SELECT o_custkey, ${Exact.sumSql("o_totalprice", 2, 18)} AS early_rev
        |  FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
        |  GROUP BY 1),
        |l AS (
-       |  SELECT o_custkey AS lk, ${dsumSql("o_totalprice")} AS late_rev
+       |  SELECT o_custkey AS lk, ${Exact.sumSql("o_totalprice", 2, 18)} AS late_rev
        |  FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
        |  GROUP BY 1),
        |d AS (
@@ -1794,19 +1772,18 @@ object RelationalQueries {
        |    NTILE(10) OVER (ORDER BY early_rev DESC, o_custkey) AS decile
        |  FROM e LEFT JOIN l ON o_custkey = lk),
        |t AS (
-       |  SELECT CAST(SUM(CAST(early_rev AS DECIMAL(28,6))) AS DOUBLE) AS te,
-       |    CAST(SUM(CAST(late_rev AS DECIMAL(28,6))) AS DOUBLE) AS tl
+       |  SELECT ${Exact.sumSql("early_rev", 6)} AS te,
+       |    ${Exact.sumSql("late_rev", 6)} AS tl
        |  FROM d),
        |p AS (
        |  SELECT decile, COUNT(*) AS n_custs,
-       |    CAST(SUM(CAST(early_rev AS DECIMAL(28,6))) AS DOUBLE) AS de,
-       |    CAST(SUM(CAST(late_rev AS DECIMAL(28,6))) AS DOUBLE) AS dl
+       |    ${Exact.sumSql("early_rev", 6)} AS de,
+       |    ${Exact.sumSql("late_rev", 6)} AS dl
        |  FROM d GROUP BY 1)
        |SELECT CAST(decile AS INT) AS decile, CAST(n_custs AS BIGINT) AS n_custs,
        |  ROUND(de / te, 6) AS early_share,
        |  ROUND(dl / tl, 6) AS late_share,
-       |  ROUND(CAST(SUM(CAST(dl AS DECIMAL(28,6))) OVER (ORDER BY decile
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
+       |  ROUND(${Exact.sumOverSql("dl", "(ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)", 6)}
        |    / tl, 6) AS cum_late_share
        |FROM p CROSS JOIN t ORDER BY decile""".stripMargin
 
@@ -1827,13 +1804,13 @@ object RelationalQueries {
       .join(broadcast(Tables.supplier(spark, dir)
         .select($"s_suppkey", $"s_nationkey")), $"l_suppkey" === $"s_suppkey")
       .groupBy($"s_nationkey".as("ek"))
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6, 18)
         .as("export_rev"))
     val imports = Tables.orders(spark, dir)
       .join(broadcast(Tables.customer(spark, dir)
         .select($"c_custkey", $"c_nationkey")), $"o_custkey" === $"c_custkey")
       .groupBy($"c_nationkey".as("ik"))
-      .agg(dsum($"o_totalprice").as("import_val"))
+      .agg(Exact.sum($"o_totalprice", 2, 18).as("import_val"))
     exports.join(imports, $"ek" === $"ik", "full_outer")
       .join(broadcast(nat), coalesce($"ek", $"ik") === $"n_nationkey")
       .select($"n_name".as("nation"),
@@ -1850,10 +1827,10 @@ object RelationalQueries {
   val q73Sql: String =
     s"""WITH ex AS (
        |  SELECT s_nationkey AS ek,
-       |    ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS export_rev
+       |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 6, 18)} AS export_rev
        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey GROUP BY 1),
        |im AS (
-       |  SELECT c_nationkey AS ik, ${dsumSql("o_totalprice")} AS import_val
+       |  SELECT c_nationkey AS ik, ${Exact.sumSql("o_totalprice", 2, 18)} AS import_val
        |  FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1)
        |SELECT n_name AS nation,
        |  ROUND(COALESCE(export_rev, 0.0), 2) AS export_rev,
@@ -1882,32 +1859,32 @@ object RelationalQueries {
     import spark.implicits._
     val pp = Tables.materialize(Tables.lineitem(spark, dir)
       .groupBy(year($"l_shipdate").as("yr"), $"l_partkey")
-      .agg(dsum($"l_extendedprice", 6).as("sp"),
-        dsum($"l_quantity", 6).as("sq"))
+      .agg(Exact.sum($"l_extendedprice", 6, 18).as("sp"),
+        Exact.sum($"l_quantity", 6, 18).as("sq"))
       .select($"yr", $"l_partkey", ($"sp" / $"sq").as("p"), $"sq"))
     val base = pp.filter($"yr" === 1995)
       .select($"l_partkey".as("bk"), $"p".as("p0"), $"sq".as("q0"))
     pp.join(base, $"l_partkey" === $"bk")
       .groupBy($"yr")
       .agg(count(lit(1)).as("n_parts"),
-        round(sum(($"p" * $"q0").cast(DecimalType(28, 6))).cast("double")
-          / sum(($"p0" * $"q0").cast(DecimalType(28, 6))).cast("double"),
+        round(Exact.sum($"p" * $"q0", 6)
+          / Exact.sum($"p0" * $"q0", 6),
           6).as("price_index"))
       .orderBy($"yr")
   }
 
   val q74Sql: String =
-    """WITH pp AS (
+    s"""WITH pp AS (
       |  SELECT year(l_shipdate) AS yr, l_partkey,
-      |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
-      |      / CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS p,
-      |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sq
+      |    ${Exact.sumSql("l_extendedprice", 6, 18)}
+      |      / ${Exact.sumSql("l_quantity", 6, 18)} AS p,
+      |    ${Exact.sumSql("l_quantity", 6, 18)} AS sq
       |  FROM lineitem GROUP BY 1, 2),
       |base AS (
       |  SELECT l_partkey AS bk, p AS p0, sq AS q0 FROM pp WHERE yr = 1995)
       |SELECT yr, CAST(COUNT(*) AS BIGINT) AS n_parts,
-      |  ROUND(CAST(SUM(CAST(p * q0 AS DECIMAL(28,6))) AS DOUBLE)
-      |    / CAST(SUM(CAST(p0 * q0 AS DECIMAL(28,6))) AS DOUBLE), 6)
+      |  ROUND(${Exact.sumSql("p * q0", 6)}
+      |    / ${Exact.sumSql("p0 * q0", 6)}, 6)
       |    AS price_index
       |FROM pp JOIN base ON l_partkey = bk
       |GROUP BY yr ORDER BY yr""".stripMargin
@@ -1932,19 +1909,19 @@ object RelationalQueries {
     import spark.implicits._
     val pp = Tables.materialize(Tables.lineitem(spark, dir)
       .groupBy(year($"l_shipdate").as("yr"), $"l_partkey")
-      .agg(dsum($"l_extendedprice", 6).as("sp"),
-        dsum($"l_quantity", 6).as("sq"))
+      .agg(Exact.sum($"l_extendedprice", 6, 18).as("sp"),
+        Exact.sum($"l_quantity", 6, 18).as("sq"))
       .select($"yr", $"l_partkey", ($"sp" / $"sq").as("p"), $"sq"))
     val base = pp.filter($"yr" === 1995)
       .select($"l_partkey".as("bk"), $"p".as("p0"), $"sq".as("q0"))
     pp.join(base, $"l_partkey" === $"bk")
       .groupBy($"yr")
       .agg(count(lit(1)).as("n_parts"),
-        (sum(($"p" * $"sq").cast(DecimalType(28, 6))).cast("double")
-          / sum(($"p0" * $"sq").cast(DecimalType(28, 6))).cast("double"))
+        (Exact.sum($"p" * $"sq", 6)
+          / Exact.sum($"p0" * $"sq", 6))
           .as("pa"),
-        (sum(($"p" * $"q0").cast(DecimalType(28, 6))).cast("double")
-          / sum(($"p0" * $"q0").cast(DecimalType(28, 6))).cast("double"))
+        (Exact.sum($"p" * $"q0", 6)
+          / Exact.sum($"p0" * $"q0", 6))
           .as("la"))
       .select($"yr", $"n_parts",
         round($"pa", 6).as("paasche_index"),
@@ -1953,20 +1930,20 @@ object RelationalQueries {
   }
 
   val q75Sql: String =
-    """WITH pp AS (
+    s"""WITH pp AS (
       |  SELECT year(l_shipdate) AS yr, l_partkey,
-      |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
-      |      / CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS p,
-      |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sq
+      |    ${Exact.sumSql("l_extendedprice", 6, 18)}
+      |      / ${Exact.sumSql("l_quantity", 6, 18)} AS p,
+      |    ${Exact.sumSql("l_quantity", 6, 18)} AS sq
       |  FROM lineitem GROUP BY 1, 2),
       |base AS (
       |  SELECT l_partkey AS bk, p AS p0, sq AS q0 FROM pp WHERE yr = 1995),
       |ix AS (
       |  SELECT yr, CAST(COUNT(*) AS BIGINT) AS n_parts,
-      |    CAST(SUM(CAST(p * sq AS DECIMAL(28,6))) AS DOUBLE)
-      |      / CAST(SUM(CAST(p0 * sq AS DECIMAL(28,6))) AS DOUBLE) AS pa,
-      |    CAST(SUM(CAST(p * q0 AS DECIMAL(28,6))) AS DOUBLE)
-      |      / CAST(SUM(CAST(p0 * q0 AS DECIMAL(28,6))) AS DOUBLE) AS la
+      |    ${Exact.sumSql("p * sq", 6)}
+      |      / ${Exact.sumSql("p0 * sq", 6)} AS pa,
+      |    ${Exact.sumSql("p * q0", 6)}
+      |      / ${Exact.sumSql("p0 * q0", 6)} AS la
       |  FROM pp JOIN base ON l_partkey = bk
       |  GROUP BY yr)
       |SELECT yr, n_parts, ROUND(pa, 6) AS paasche_index,
@@ -2091,36 +2068,35 @@ object RelationalQueries {
     import spark.implicits._
     val cells = Tables.materialize(Tables.lineitem(spark, dir)
       .groupBy(year($"l_shipdate").as("yr"), month($"l_shipdate").as("mo"))
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6, 18)
         .as("rev")))
     val ym = cells.groupBy($"yr")
-      .agg((sum($"rev".cast(DecimalType(28, 12))).cast("double")
+      .agg((Exact.sum($"rev")
         / count(lit(1))).as("ymean"))
     cells.join(broadcast(ym), "yr")
       .select($"mo", ($"rev" / $"ymean").as("ratio"))
       .groupBy($"mo")
       .agg(count(lit(1)).as("n_years"),
-        round(sum($"ratio".cast(DecimalType(28, 12))).cast("double")
+        round(Exact.sum($"ratio")
           / count(lit(1)), 6).as("seasonal_index"))
       .orderBy($"mo")
   }
 
   val q78Sql: String =
-    """WITH cells AS (
+    s"""WITH cells AS (
       |  SELECT year(l_shipdate) AS yr, month(l_shipdate) AS mo,
-      |    CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-      |      AS DECIMAL(18,6))) AS DOUBLE) AS rev
+      |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 6, 18)} AS rev
       |  FROM lineitem GROUP BY 1, 2),
       |ym AS (
       |  SELECT yr,
-      |    CAST(SUM(CAST(rev AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*)
+      |    ${Exact.sumSql("rev")} / COUNT(*)
       |      AS ymean
       |  FROM cells GROUP BY 1),
       |r AS (
       |  SELECT mo, cells.rev / ym.ymean AS ratio
       |  FROM cells JOIN ym ON cells.yr = ym.yr)
       |SELECT mo, CAST(COUNT(*) AS BIGINT) AS n_years,
-      |  ROUND(CAST(SUM(CAST(ratio AS DECIMAL(28,12))) AS DOUBLE)
+      |  ROUND(${Exact.sumSql("ratio")}
       |    / COUNT(*), 6) AS seasonal_index
       |FROM r GROUP BY mo ORDER BY mo""".stripMargin
 
@@ -2143,7 +2119,7 @@ object RelationalQueries {
     val cells = Tables.lineitem(spark, dir)
       .groupBy(year($"l_shipdate").as("yr"),
         ((month($"l_shipdate") + 2) / 3).cast("int").as("qtr"))
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6, 18)
         .as("rev"), count(lit(1)).as("n_lines"))
     val w = Window.orderBy($"yr", $"qtr")
     cells
@@ -2161,11 +2137,10 @@ object RelationalQueries {
   }
 
   val q79Sql: String =
-    """WITH cells AS (
+    s"""WITH cells AS (
       |  SELECT year(l_shipdate) AS yr,
       |    CAST((month(l_shipdate) + 2) // 3 AS INT) AS qtr,
-      |    CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-      |      AS DECIMAL(18,6))) AS DOUBLE) AS rev,
+      |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 6, 18)} AS rev,
       |    COUNT(*) AS n_lines
       |  FROM lineitem GROUP BY 1, 2),
       |lagd AS (
@@ -2246,10 +2221,10 @@ object RelationalQueries {
       .groupBy(year($"l_shipdate").as("yr"))
       .agg(count(lit(1)).as("n_lines"),
         sum(when($"l_discount" > 0.0, 1L).otherwise(0L)).as("n_discounted"),
-        dsum($"l_discount" * $"l_quantity", 6).as("sdq"),
-        dsum($"l_quantity", 6).as("sq"),
-        dsum($"l_extendedprice" * $"l_discount", 6).as("foregone"),
-        dsum($"l_extendedprice", 6).as("gross"))
+        Exact.sum($"l_discount" * $"l_quantity", 6, 18).as("sdq"),
+        Exact.sum($"l_quantity", 6, 18).as("sq"),
+        Exact.sum($"l_extendedprice" * $"l_discount", 6, 18).as("foregone"),
+        Exact.sum($"l_extendedprice", 6, 18).as("gross"))
       .select($"yr", $"n_lines", $"n_discounted",
         round($"n_discounted".cast("double") / $"n_lines", 6)
           .as("discounted_share"),
@@ -2260,16 +2235,14 @@ object RelationalQueries {
   }
 
   val q81Sql: String =
-    """WITH y AS (
+    s"""WITH y AS (
       |  SELECT year(l_shipdate) AS yr, COUNT(*) AS n_lines,
       |    SUM(CASE WHEN l_discount > 0.0 THEN 1 ELSE 0 END)
       |      AS n_discounted,
-      |    CAST(SUM(CAST(l_discount * l_quantity AS DECIMAL(18,6)))
-      |      AS DOUBLE) AS sdq,
-      |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sq,
-      |    CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6)))
-      |      AS DOUBLE) AS foregone,
-      |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
+      |    ${Exact.sumSql("l_discount * l_quantity", 6, 18)} AS sdq,
+      |    ${Exact.sumSql("l_quantity", 6, 18)} AS sq,
+      |    ${Exact.sumSql("l_extendedprice * l_discount", 6, 18)} AS foregone,
+      |    ${Exact.sumSql("l_extendedprice", 6, 18)}
       |      AS gross
       |  FROM lineitem GROUP BY 1)
       |SELECT yr, CAST(n_lines AS BIGINT) AS n_lines,
@@ -2390,8 +2363,6 @@ object RelationalQueries {
   // ORDER BY runs on the RAW cv with partkey tie-break.
   def q83PriceDispersion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     // Deliberately NOT the q69 single-shuffle cascade (repartition on
     // l_partkey before both groupBys): that form loses map-side partial
     // aggregation and ships raw fact rows — measured 19% slower at 16×.
@@ -2404,10 +2375,10 @@ object RelationalQueries {
         ($"l_extendedprice".cast("double") / $"l_quantity".cast("double"))
           .as("up"))
       .groupBy($"l_partkey", $"l_suppkey")
-      .agg((dsum($"up") / count(lit(1))).as("sp"))
+      .agg((Exact.sum($"up") / count(lit(1))).as("sp"))
     val stats = supp.groupBy($"l_partkey")
       .agg(count(lit(1)).as("n_suppliers"),
-        dsum($"sp").as("s1"), dsum($"sp" * $"sp").as("s2"))
+        Exact.sum($"sp").as("s1"), Exact.sum($"sp" * $"sp").as("s2"))
       .filter($"n_suppliers" >= 3)
       .select($"l_partkey", $"n_suppliers",
         ($"s1" / $"n_suppliers").as("mean_price"),
@@ -2424,16 +2395,15 @@ object RelationalQueries {
   }
 
   val q83Sql: String =
-    """WITH supp AS (
+    s"""WITH supp AS (
       |  SELECT l_partkey, l_suppkey,
-      |    CAST(SUM(CAST(CAST(l_extendedprice AS DOUBLE)
-      |      / CAST(l_quantity AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE)
+      |    ${Exact.sumSql("CAST(l_extendedprice AS DOUBLE) / CAST(l_quantity AS DOUBLE)")}
       |      / COUNT(*) AS sp
       |  FROM lineitem GROUP BY 1, 2),
       |p AS (
       |  SELECT l_partkey, COUNT(*) AS n_suppliers,
-      |    CAST(SUM(CAST(sp AS DECIMAL(28,12))) AS DOUBLE) AS s1,
-      |    CAST(SUM(CAST(sp * sp AS DECIMAL(28,12))) AS DOUBLE) AS s2
+      |    ${Exact.sumSql("sp")} AS s1,
+      |    ${Exact.sumSql("sp * sp")} AS s2
       |  FROM supp GROUP BY 1
       |  HAVING COUNT(*) >= 3),
       |stats AS (
@@ -2506,7 +2476,7 @@ object RelationalQueries {
           * ($"n_obs".cast("double") - $"n" * $"exp_share")
           / ($"n" * $"exp_share")).as("term"))
     val chi2 = terms
-      .agg(sum($"term".cast(DecimalType(28, 12))).cast("double").as("chi2"))
+      .agg(Exact.sum($"term").as("chi2"))
     terms.crossJoin(broadcast(chi2))
       .select($"digit", $"n_obs",
         round($"n_obs".cast("double") / $"n", 6).as("obs_share"),
@@ -2519,7 +2489,7 @@ object RelationalQueries {
   }
 
   val q84Sql: String =
-    """WITH obs AS (
+    s"""WITH obs AS (
       |  SELECT CAST(SUBSTR(CAST(CAST(ROUND(l_extendedprice * 100, 0)
       |      AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit,
       |    COUNT(*) AS n_obs
@@ -2546,7 +2516,7 @@ object RelationalQueries {
       |      / (t.n * d.exp_share) AS term
       |  FROM dense d CROSS JOIN tot t),
       |x AS (
-      |  SELECT CAST(SUM(CAST(term AS DECIMAL(28,12))) AS DOUBLE) AS chi2
+      |  SELECT ${Exact.sumSql("term")} AS chi2
       |  FROM terms)
       |SELECT CAST(t.digit AS INT) AS digit, CAST(t.n_obs AS BIGINT) AS n_obs,
       |  ROUND(CAST(t.n_obs AS DOUBLE) / t.n, 6) AS obs_share,
@@ -2576,11 +2546,9 @@ object RelationalQueries {
   // report gini = 0, never NaN.
   def q85Gini(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     val rev = Tables.lineitem(spark, dir)
       .groupBy($"l_suppkey")
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("rev"))
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("rev"))
     val dim = Tables.supplier(spark, dir)
       .select($"s_suppkey", $"s_nationkey")
       .join(Tables.nation(spark, dir)
@@ -2592,8 +2560,8 @@ object RelationalQueries {
         Window.partitionBy($"nation").orderBy($"rev", $"l_suppkey")))
     ranked.groupBy($"nation")
       .agg(count(lit(1)).as("n_suppliers"),
-        dsum($"rev").as("tot"),
-        dsum($"i" * $"rev").as("wsum"))
+        Exact.sum($"rev").as("tot"),
+        Exact.sum($"i" * $"rev").as("wsum"))
       .select($"nation", $"n_suppliers",
         round($"tot", 2).as("total_revenue"),
         round(when($"tot" <= 0.0, 0.0)
@@ -2607,10 +2575,9 @@ object RelationalQueries {
   }
 
   val q85Sql: String =
-    """WITH rev AS (
+    s"""WITH rev AS (
       |  SELECT l_suppkey,
-      |    CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-      |      AS DECIMAL(28,12))) AS DOUBLE) AS rev
+      |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)")} AS rev
       |  FROM lineitem GROUP BY 1),
       |dim AS (
       |  SELECT s_suppkey, n_name AS nation
@@ -2622,8 +2589,8 @@ object RelationalQueries {
       |  FROM rev r JOIN dim d ON r.l_suppkey = d.s_suppkey),
       |a AS (
       |  SELECT nation, COUNT(*) AS n,
-      |    CAST(SUM(CAST(rev AS DECIMAL(28,12))) AS DOUBLE) AS tot,
-      |    CAST(SUM(CAST(i * rev AS DECIMAL(28,12))) AS DOUBLE) AS wsum
+      |    ${Exact.sumSql("rev")} AS tot,
+      |    ${Exact.sumSql("i * rev")} AS wsum
       |  FROM ranked GROUP BY 1)
       |SELECT nation, CAST(n AS BIGINT) AS n_suppliers,
       |  ROUND(tot, 2) AS total_revenue,
@@ -2660,8 +2627,6 @@ object RelationalQueries {
   private[graft] def q86MomentTable(spark: SparkSession,
                                     dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     Tables.lineitem(spark, dir)
       .select($"l_orderkey", $"l_shipdate")
       .join(Tables.orders(spark, dir)
@@ -2670,17 +2635,15 @@ object RelationalQueries {
       .select($"o_orderpriority".as("priority"),
         datediff($"l_shipdate", $"o_orderdate").cast("double").as("y"))
       .groupBy($"priority")
-      .agg(count(lit(1)).as("n"), dsum($"y").as("s1"),
-        dsum($"y" * $"y").as("s2"))
+      .agg(count(lit(1)).as("n"), Exact.sum($"y").as("s1"),
+        Exact.sum($"y" * $"y").as("s2"))
   }
 
   def q86Anova(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val g = Tables.materialize(q86MomentTable(spark, dir))
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     val tot = g.agg(sum($"n").as("nt"), count(lit(1)).as("k"),
-      dsum($"s1").as("t1"), dsum($"s2").as("t2")).filter($"k" >= 2)
+      Exact.sum($"s1").as("t1"), Exact.sum($"s2").as("t2")).filter($"k" >= 2)
     val x = g.crossJoin(broadcast(tot))
       .select($"priority", $"n", $"s1", $"s2", $"nt", $"k", $"t1", $"t2",
         // per-group between-SS term n_g·(ȳ_g − ȳ)², moment form
@@ -2688,8 +2651,8 @@ object RelationalQueries {
           * $"n").as("ssb_term"),
         ($"s2" - $"s1" * $"s1" / $"n").as("ssw_term"))
     val f = x.agg(
-      sum($"ssb_term".cast(DecimalType(28, 12))).cast("double").as("ssb"),
-      sum($"ssw_term".cast(DecimalType(28, 12))).cast("double").as("ssw"),
+      Exact.sum($"ssb_term").as("ssb"),
+      Exact.sum($"ssw_term").as("ssw"),
       max($"nt").as("nt2"), max($"k").as("k2"))
       .select($"ssb", $"ssw",
         when($"ssw" <= 0.0 || $"k2" <= 1 || $"nt2" <= $"k2", 0.0)
@@ -2725,19 +2688,16 @@ object RelationalQueries {
   }
 
   val q86Sql: String =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT o_orderpriority AS priority, COUNT(*) AS n,
-      |    CAST(SUM(CAST(CAST(DATE_DIFF('day', o_orderdate, l_shipdate)
-      |      AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS s1,
-      |    CAST(SUM(CAST(CAST(DATE_DIFF('day', o_orderdate, l_shipdate)
-      |      AS DOUBLE) * CAST(DATE_DIFF('day', o_orderdate, l_shipdate)
-      |      AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS s2
+      |    ${Exact.sumSql("CAST(DATE_DIFF('day', o_orderdate, l_shipdate) AS DOUBLE)")} AS s1,
+      |    ${Exact.sumSql("CAST(DATE_DIFF('day', o_orderdate, l_shipdate) AS DOUBLE) * CAST(DATE_DIFF('day', o_orderdate, l_shipdate) AS DOUBLE)")} AS s2
       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |  GROUP BY 1),
       |tot AS (
       |  SELECT SUM(n) AS nt, COUNT(*) AS k,
-      |    CAST(SUM(CAST(s1 AS DECIMAL(28,12))) AS DOUBLE) AS t1,
-      |    CAST(SUM(CAST(s2 AS DECIMAL(28,12))) AS DOUBLE) AS t2
+      |    ${Exact.sumSql("s1")} AS t1,
+      |    ${Exact.sumSql("s2")} AS t2
       |  FROM g HAVING COUNT(*) >= 2),
       |x AS (
       |  SELECT g.priority, g.n, g.s1, g.s2, t.nt, t.k, t.t1,
@@ -2747,8 +2707,8 @@ object RelationalQueries {
       |  FROM g CROSS JOIN tot t),
       |fz AS (
       |  SELECT
-      |    CAST(SUM(CAST(ssb_term AS DECIMAL(28,12))) AS DOUBLE) AS ssb,
-      |    CAST(SUM(CAST(ssw_term AS DECIMAL(28,12))) AS DOUBLE) AS ssw,
+      |    ${Exact.sumSql("ssb_term")} AS ssb,
+      |    ${Exact.sumSql("ssw_term")} AS ssw,
       |    MAX(nt) AS nt2, MAX(k) AS k2
       |  FROM x),
       |fr AS (
@@ -2855,8 +2815,6 @@ object RelationalQueries {
   // revenue DECIMAL-routed; ordered by bucket.
   def q88RepeatBusiness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     // collapse the fact to (order, supplier) grain BEFORE the orders
     // join (custkey is functionally dependent on orderkey, so the
     // values are identical) — the join then ships the collapsed table,
@@ -2865,12 +2823,12 @@ object RelationalQueries {
       .select($"l_orderkey", $"l_suppkey",
         ($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("rev"))
       .groupBy($"l_orderkey", $"l_suppkey")
-      .agg(dsum($"rev").as("orev"))
+      .agg(Exact.sum($"rev").as("orev"))
     val pairs = osRev
       .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
         $"l_orderkey" === $"o_orderkey")
       .groupBy($"o_custkey", $"l_suppkey")
-      .agg(count(lit(1)).as("n_orders"), dsum($"orev").as("prev"))
+      .agg(count(lit(1)).as("n_orders"), Exact.sum($"orev").as("prev"))
     val bucketed = pairs.select(
       when($"n_orders" <= 3, $"n_orders")
         .otherwise(expr(
@@ -2881,7 +2839,7 @@ object RelationalQueries {
     // so the fact cascade runs once
     val hist = Tables.materialize(bucketed.groupBy($"depth_bucket")
       .agg(count(lit(1)).as("n_pairs"), sum($"n_orders").as("n_orders"),
-        dsum($"prev").as("rev")))
+        Exact.sum($"prev").as("rev")))
     val tot = hist.agg(sum($"n_pairs").as("np"),
       sum(when($"depth_bucket" >= 2, $"n_pairs").otherwise(0L))
         .as("nrep")).filter($"np" > 0)
@@ -2893,14 +2851,13 @@ object RelationalQueries {
   }
 
   val q88Sql: String =
-    """WITH osr AS (
+    s"""WITH osr AS (
       |  SELECT l_orderkey, l_suppkey,
-      |    CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-      |      AS DECIMAL(28,12))) AS DOUBLE) AS orev
+      |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)")} AS orev
       |  FROM lineitem GROUP BY 1, 2),
       |pairs AS (
       |  SELECT o.o_custkey, osr.l_suppkey, COUNT(*) AS n_orders,
-      |    CAST(SUM(CAST(osr.orev AS DECIMAL(28,12))) AS DOUBLE) AS prev
+      |    ${Exact.sumSql("osr.orev")} AS prev
       |  FROM osr JOIN orders o ON osr.l_orderkey = o.o_orderkey
       |  GROUP BY 1, 2),
       |bk AS (
@@ -2912,7 +2869,7 @@ object RelationalQueries {
       |hist AS (
       |  SELECT depth_bucket, COUNT(*) AS n_pairs,
       |    CAST(SUM(n_orders) AS BIGINT) AS n_orders,
-      |    CAST(SUM(CAST(prev AS DECIMAL(28,12))) AS DOUBLE) AS rev
+      |    ${Exact.sumSql("prev")} AS rev
       |  FROM bk GROUP BY 1),
       |tot AS (
       |  SELECT SUM(n_pairs) AS np,
@@ -2945,11 +2902,9 @@ object RelationalQueries {
   // exact timestamp arithmetic; totals DECIMAL-routed, round 2.
   def q89SalesOpportunity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     val cust = Tables.customer(spark, dir)
     val avgBal = cust.filter($"c_acctbal" > 0.0)
-      .agg((dsum($"c_acctbal") / count(lit(1))).as("ab"))
+      .agg((Exact.sum($"c_acctbal") / count(lit(1))).as("ab"))
       .filter($"ab".isNotNull)
     val orders = Tables.orders(spark, dir)
     val cut = orders.agg(max($"o_orderdate").as("mx"))
@@ -2968,13 +2923,13 @@ object RelationalQueries {
         $"c_nationkey" === $"n_nationkey")
       .groupBy($"nation")
       .agg(count(lit(1)).as("n_customers"),
-        round(dsum($"c_acctbal"), 2).as("idle_balance"))
+        round(Exact.sum($"c_acctbal"), 2).as("idle_balance"))
       .orderBy($"nation")
   }
 
   val q89Sql: String =
-    """WITH ab AS (
-      |  SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(28,12))) AS DOUBLE)
+    s"""WITH ab AS (
+      |  SELECT ${Exact.sumSql("c_acctbal")}
       |    / COUNT(*) AS ab
       |  FROM customer WHERE c_acctbal > 0.0
       |  HAVING COUNT(*) > 0),
@@ -2991,7 +2946,7 @@ object RelationalQueries {
       |    AND NOT EXISTS (SELECT 1 FROM recent r
       |      WHERE r.o_custkey = c.c_custkey))
       |SELECT n.n_name AS nation, COUNT(*) AS n_customers,
-      |  ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(28,12))) AS DOUBLE), 2)
+      |  ROUND(${Exact.sumSql("c_acctbal")}, 2)
       |    AS idle_balance
       |FROM cand JOIN nation n ON c_nationkey = n_nationkey
       |GROUP BY 1 ORDER BY 1""".stripMargin
@@ -3046,7 +3001,7 @@ object RelationalQueries {
   // 2 columns of 11 — the plan-audit showcase (PushedFilters carries
   // all four bounds; ReadSchema is 4 columns).
   // Determinism: the product is per-row double (bit-identical both
-  // engines); the sum routes through DECIMAL(28,12).
+  // engines).
   def q92ForecastRevenue(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.lineitem(spark, dir)
@@ -3055,15 +3010,13 @@ object RelationalQueries {
         && $"l_discount" >= 0.05 && $"l_discount" <= 0.07
         && $"l_quantity" < 24.0)
       .agg(count(lit(1)).as("n_lines"),
-        round(sum(($"l_extendedprice" * $"l_discount")
-          .cast(DecimalType(28, 12))).cast("double"), 2)
+        round(Exact.sum($"l_extendedprice" * $"l_discount"), 2)
           .as("promo_revenue"))
   }
 
   val q92Sql: String =
-    """SELECT COUNT(*) AS n_lines,
-      |  ROUND(CAST(SUM(CAST(l_extendedprice * l_discount
-      |    AS DECIMAL(28,12))) AS DOUBLE), 2) AS promo_revenue
+    s"""SELECT COUNT(*) AS n_lines,
+      |  ROUND(${Exact.sumSql("l_extendedprice * l_discount")}, 2) AS promo_revenue
       |FROM lineitem
       |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
       |  AND l_shipdate < TIMESTAMP '1998-01-01'
@@ -3087,7 +3040,6 @@ object RelationalQueries {
   // differently across engines at larger SFs.
   def q93PartValueConcentration(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def d28(c: Column) = sum(c.cast(DecimalType(28, 12))).cast("double")
     val asiaNations = Tables.nation(spark, dir)
       .join(Tables.region(spark, dir).filter($"r_name" === "ASIA"),
         $"n_regionkey" === $"r_regionkey")
@@ -3099,9 +3051,9 @@ object RelationalQueries {
       Tables.lineitem(spark, dir)
         .join(broadcast(asiaSupp), $"l_suppkey" === $"s_suppkey", "left_semi")
         .groupBy($"l_partkey")
-        .agg(d28($"l_extendedprice" * (lit(1.0) - $"l_discount"))
+        .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"))
           .as("value")))
-    val tot = byPart.agg(d28($"value").as("total")).filter($"total" > 0.0)
+    val tot = byPart.agg(Exact.sum($"value").as("total")).filter($"total" > 0.0)
     byPart.crossJoin(broadcast(tot))
       .filter($"value" > $"total" * 0.001)
       .select($"l_partkey".as("partkey"),
@@ -3111,20 +3063,19 @@ object RelationalQueries {
   }
 
   val q93Sql: String =
-    """WITH asup AS (
+    s"""WITH asup AS (
       |  SELECT s_suppkey FROM supplier
       |  JOIN nation ON s_nationkey = n_nationkey
       |  JOIN region ON n_regionkey = r_regionkey
       |  WHERE r_name = 'ASIA'),
       |bp AS (
       |  SELECT l_partkey,
-      |    CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-      |      AS DECIMAL(28,12))) AS DOUBLE) AS value
+      |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)")} AS value
       |  FROM lineitem
       |  WHERE l_suppkey IN (SELECT s_suppkey FROM asup)
       |  GROUP BY 1),
       |tot AS (
-      |  SELECT CAST(SUM(CAST(value AS DECIMAL(28,12))) AS DOUBLE)
+      |  SELECT ${Exact.sumSql("value")}
       |    AS total
       |  FROM bp HAVING SUM(CAST(value AS DECIMAL(28,12))) > 0)
       |SELECT bp.l_partkey AS partkey, ROUND(bp.value, 2) AS value,
@@ -3203,15 +3154,13 @@ object RelationalQueries {
               && $"l_quantity" >= 20.0 && $"l_quantity" <= 30.0)))
       .groupBy($"p_brand".as("band"))
       .agg(count(lit(1)).as("n_lines"),
-        round(sum(($"l_extendedprice" * (lit(1.0) - $"l_discount"))
-          .cast(DecimalType(28, 12))).cast("double"), 2).as("revenue"))
+        round(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount")), 2).as("revenue"))
       .orderBy($"band")
   }
 
   val q95Sql: String =
-    """SELECT p_brand AS band, COUNT(*) AS n_lines,
-      |  ROUND(CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-      |    AS DECIMAL(28,12))) AS DOUBLE), 2) AS revenue
+    s"""SELECT p_brand AS band, COUNT(*) AS n_lines,
+      |  ROUND(${Exact.sumSql("l_extendedprice * (1.0 - l_discount)")}, 2) AS revenue
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |WHERE (p_brand = 'Brand#1' AND p_size <= 10
       |    AND l_quantity >= 1.0 AND l_quantity <= 11.0)
@@ -3252,8 +3201,7 @@ object RelationalQueries {
     val dom = lead.groupBy($"l_suppkey")
       .agg(count(lit(1)).as("n_lead_parts"),
         sum($"qty").cast("double").as("lead_qty"),
-        (sum(($"qty" / $"total_qty").cast(DecimalType(15, 9)))
-          .cast("double") / count(lit(1))).as("mean_share"))
+        (Exact.sum($"qty" / $"total_qty", 9, 15) / count(lit(1))).as("mean_share"))
     dom.join(broadcast(Tables.supplier(spark, dir)
           .join(Tables.nation(spark, dir),
             $"s_nationkey" === $"n_nationkey")
@@ -3266,7 +3214,7 @@ object RelationalQueries {
   }
 
   val q96Sql: String =
-    """WITH ps AS (
+    s"""WITH ps AS (
       |  SELECT l_partkey, l_suppkey, SUM(l_quantity) AS qty
       |  FROM lineitem GROUP BY 1, 2),
       |lead AS (
@@ -3278,7 +3226,7 @@ object RelationalQueries {
       |dom AS (
       |  SELECT l_suppkey, COUNT(*) AS n_lead_parts,
       |    CAST(SUM(qty) AS DOUBLE) AS lead_qty,
-      |    CAST(SUM(CAST(qty / total_qty AS DECIMAL(15,9))) AS DOUBLE)
+      |    ${Exact.sumSql("qty / total_qty", 9, 15)}
       |      / COUNT(*) AS mean_share
       |  FROM lead WHERE rk = 1 GROUP BY 1)
       |SELECT s.s_name AS supplier, n.n_name AS nation,
@@ -3537,34 +3485,33 @@ object RelationalQueries {
   // DECIMAL-routed revenue; total ordering by nation.
   def q100NationTradeBalance(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def d28(c: Column) = sum(c.cast(DecimalType(28, 12))).cast("double")
     val rev = ($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("rev")
     val nations = broadcast(Tables.nation(spark, dir)
       .select($"n_nationkey", $"n_name"))
     val earned = Tables.lineitem(spark, dir)
       .select($"l_suppkey", rev)
-      .groupBy($"l_suppkey").agg(d28($"rev").as("srev"))
+      .groupBy($"l_suppkey").agg(Exact.sum($"rev").as("srev"))
       .join(broadcast(Tables.supplier(spark, dir)
         .select($"s_suppkey", $"s_nationkey")), $"l_suppkey" === $"s_suppkey")
       .groupBy($"s_nationkey".as("nk"))
-      .agg(sum($"srev".cast(DecimalType(28, 12))).cast("double")
+      .agg(Exact.sum($"srev")
         .as("earned"))
     val spent = Tables.lineitem(spark, dir)
       .select($"l_orderkey", rev)
-      .groupBy($"l_orderkey").agg(d28($"rev").as("orev"))
+      .groupBy($"l_orderkey").agg(Exact.sum($"rev").as("orev"))
       .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
         $"l_orderkey" === $"o_orderkey")
       .join(broadcast(Tables.customer(spark, dir)
         .select($"c_custkey", $"c_nationkey")), $"o_custkey" === $"c_custkey")
       .groupBy($"c_nationkey".as("nk2"))
-      .agg(sum($"orev".cast(DecimalType(28, 12))).cast("double")
+      .agg(Exact.sum($"orev")
         .as("spent"))
     val aligned = earned.join(spent, $"nk" === $"nk2", "full_outer")
       .select(coalesce($"nk", $"nk2").as("nk"),
         coalesce($"earned", lit(0.0)).as("earned"),
         coalesce($"spent", lit(0.0)).as("spent"))
     val tot = aligned.agg(
-      sum($"earned".cast(DecimalType(28, 12))).cast("double").as("world"))
+      Exact.sum($"earned").as("world"))
       .filter($"world" > 0.0)
     aligned.join(nations, $"nk" === $"n_nationkey")
       .crossJoin(broadcast(tot))
@@ -3578,24 +3525,22 @@ object RelationalQueries {
   }
 
   val q100Sql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT l_suppkey,
-      |    CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-      |      AS DECIMAL(28,12))) AS DOUBLE) AS srev
+      |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)")} AS srev
       |  FROM lineitem GROUP BY 1),
       |earned AS (
       |  SELECT s.s_nationkey AS nk,
-      |    CAST(SUM(CAST(e.srev AS DECIMAL(28,12))) AS DOUBLE) AS earned
+      |    ${Exact.sumSql("e.srev")} AS earned
       |  FROM e JOIN supplier s ON e.l_suppkey = s.s_suppkey
       |  GROUP BY 1),
       |o AS (
       |  SELECT l_orderkey,
-      |    CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-      |      AS DECIMAL(28,12))) AS DOUBLE) AS orev
+      |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)")} AS orev
       |  FROM lineitem GROUP BY 1),
       |spent AS (
       |  SELECT c.c_nationkey AS nk,
-      |    CAST(SUM(CAST(o.orev AS DECIMAL(28,12))) AS DOUBLE) AS spent
+      |    ${Exact.sumSql("o.orev")} AS spent
       |  FROM o
       |  JOIN orders ON o.l_orderkey = orders.o_orderkey
       |  JOIN customer c ON orders.o_custkey = c.c_custkey
@@ -3605,7 +3550,7 @@ object RelationalQueries {
       |    COALESCE(e.earned, 0.0) AS earned,
       |    COALESCE(s.spent, 0.0) AS spent
       |  FROM earned e FULL OUTER JOIN spent s ON e.nk = s.nk),
-      |t AS (SELECT CAST(SUM(CAST(earned AS DECIMAL(28,12))) AS DOUBLE)
+      |t AS (SELECT ${Exact.sumSql("earned")}
       |    AS world
       |  FROM aligned HAVING SUM(CAST(earned AS DECIMAL(28,12))) > 0)
       |SELECT n.n_name AS nation,

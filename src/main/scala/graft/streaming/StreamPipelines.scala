@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import java.sql.Timestamp
 
+import graft.Exact
+
 /** Structured Streaming wiring for the engine: watermarked windowed
   * aggregation and custom stateful sessionization. The reference's
   * "incrementality" is a daily re-run fronted by `aws s3 sync`
@@ -190,8 +192,7 @@ object StreamPipelines {
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment").as("segment"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        round(sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-          .cast("double"), 6).as("sum_value"))
+        round(Exact.sum(col("value"), 6, 18), 6).as("sum_value"))
 
   /** Streaming exact dedup: drop events whose event_id was already
     * seen, with state bounded by the watermark (a duplicate arriving

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Exact
 import graft.sources.Tables
 
 /** Event-time windowing over `events` in BATCH form — the exact same
@@ -13,13 +14,9 @@ import graft.sources.Tables
   *
   * Timestamps are projected to epoch microseconds (integers) at the
   * output boundary so the oracle compare is exact, never tz/precision
-  * dependent. Money-ish double sums go through DECIMAL(18,6) — the
-  * established pattern in this repo for order-independent sums.
+  * dependent.
   */
 object WindowQueries {
-
-  private def sumVal = round(
-    sum(col("value").cast(DecimalType(18, 6))).cast("double"), 6)
 
   // --------------------------------------------------------------------
   // st_tumbling: 1-hour tumbling windows per event_type.
@@ -27,16 +24,16 @@ object WindowQueries {
     import spark.implicits._
     Tables.events(spark, dir)
       .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n"), sumVal.as("sum_value"))
+      .agg(count(lit(1)).as("n"), round(Exact.sum(col("value"), 6, 18), 6).as("sum_value"))
       .select(unix_micros($"w.start").as("w_start_us"),
         $"event_type", $"n", $"sum_value")
       .orderBy($"w_start_us", $"event_type")
   }
 
   val stTumblingSql: String =
-    """SELECT epoch_us(date_trunc('hour', ts)) AS w_start_us, event_type,
+    s"""SELECT epoch_us(date_trunc('hour', ts)) AS w_start_us, event_type,
       |  COUNT(*) AS n,
-      |  ROUND(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_value
+      |  ROUND(${Exact.sumSql("value", 6, 18)}, 6) AS sum_value
       |FROM events
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
@@ -49,20 +46,20 @@ object WindowQueries {
     import spark.implicits._
     Tables.events(spark, dir)
       .groupBy(window($"ts", "1 hour", "30 minutes").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n"), sumVal.as("sum_value"))
+      .agg(count(lit(1)).as("n"), round(Exact.sum(col("value"), 6, 18), 6).as("sum_value"))
       .select(unix_micros($"w.start").as("w_start_us"),
         $"event_type", $"n", $"sum_value")
       .orderBy($"w_start_us", $"event_type")
   }
 
   val stSlidingSql: String =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT *, (epoch_us(ts) // 1800000000) * 1800000000 AS grid FROM events),
       |x AS (
       |  SELECT event_type, value, unnest([grid, grid - 1800000000]) AS w_start_us
       |  FROM g)
       |SELECT w_start_us, event_type, COUNT(*) AS n,
-      |  ROUND(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_value
+      |  ROUND(${Exact.sumSql("value", 6, 18)}, 6) AS sum_value
       |FROM x GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   // --------------------------------------------------------------------
@@ -73,7 +70,8 @@ object WindowQueries {
     import spark.implicits._
     Tables.events(spark, dir)
       .groupBy(session_window($"ts", "30 minutes").as("w"), $"user_id")
-      .agg(count(lit(1)).as("n_events"), sumVal.as("sum_value"))
+      .agg(count(lit(1)).as("n_events"),
+        round(Exact.sum(col("value"), 6, 18), 6).as("sum_value"))
       .select($"user_id",
         unix_micros($"w.start").as("session_start_us"),
         unix_micros($"w.end").as("session_end_us"),
@@ -82,7 +80,7 @@ object WindowQueries {
   }
 
   val stSessionSql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT user_id, event_id, ts, value,
       |    CASE WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER
       |      (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000
@@ -98,7 +96,7 @@ object WindowQueries {
       |  epoch_us(MIN(ts)) AS session_start_us,
       |  epoch_us(MAX(ts)) + 1800000000 AS session_end_us,
       |  COUNT(*) AS n_events,
-      |  ROUND(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_value
+      |  ROUND(${Exact.sumSql("value", 6, 18)}, 6) AS sum_value
       |FROM s GROUP BY user_id, session_id
       |ORDER BY user_id, session_start_us""".stripMargin
 
@@ -510,7 +508,7 @@ object WindowQueries {
     val per = ev.groupBy($"user_id")
       .agg(max(unix_micros($"ts")).as("last_us"),
         count(lit(1)).as("freq"),
-        sum($"value".cast(DecimalType(18, 6))).cast("double").as("money"))
+        Exact.sum($"value", 6, 18).as("money"))
       .crossJoin(mx)
       .withColumn("rec_us", $"corpus_max_us" - $"last_us")
     val cuts = per.agg(
@@ -528,7 +526,7 @@ object WindowQueries {
         score($"money", "mc").as("m_score"))
       .groupBy($"r_score", $"f_score", $"m_score")
       .agg(count(lit(1)).as("n_users"),
-        round(sum($"money".cast(DecimalType(18, 6))).cast("double"), 6)
+        round(Exact.sum($"money", 6, 18), 6)
           .as("total_value"))
       .orderBy($"r_score", $"f_score", $"m_score")
   }
@@ -540,7 +538,7 @@ object WindowQueries {
     s"""WITH mx AS (SELECT MAX(epoch_us(ts)) AS corpus_max_us FROM events),
        |per AS (SELECT user_id, MAX(epoch_us(ts)) AS last_us,
        |    COUNT(*) AS freq,
-       |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS money
+       |    ${Exact.sumSql("value", 6, 18)} AS money
        |  FROM events GROUP BY user_id),
        |pr AS (SELECT user_id, freq, money,
        |    corpus_max_us - last_us AS rec_us
@@ -557,7 +555,7 @@ object WindowQueries {
        |  FROM pr CROSS JOIN cuts)
        |SELECT r_score, f_score, m_score,
        |  COUNT(*) AS n_users,
-       |  ROUND(CAST(SUM(CAST(money AS DECIMAL(18,6))) AS DOUBLE), 6)
+       |  ROUND(${Exact.sumSql("money", 6, 18)}, 6)
        |    AS total_value
        |FROM sc GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
   }
@@ -579,13 +577,13 @@ object WindowQueries {
     Tables.events(spark, dir)
       .join(broadcast(dim), $"user_id" === $"c_custkey")
       .groupBy($"c_mktsegment".as("segment"), $"event_type")
-      .agg(count(lit(1)).as("n"), sumVal.as("sum_value"))
+      .agg(count(lit(1)).as("n"), round(Exact.sum(col("value"), 6, 18), 6).as("sum_value"))
       .orderBy($"segment", $"event_type")
   }
 
   val stStaticEnrichSql: String =
-    """SELECT c_mktsegment AS segment, event_type, COUNT(*) AS n,
-      |  ROUND(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_value
+    s"""SELECT c_mktsegment AS segment, event_type, COUNT(*) AS n,
+      |  ROUND(${Exact.sumSql("value", 6, 18)}, 6) AS sum_value
       |FROM events JOIN customer ON user_id = c_custkey
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
@@ -777,7 +775,6 @@ object WindowQueries {
       .agg((sum($"n").cast("double") / count(lit(1))).as("mu"),
         count(lit(1)).as("nh"))
     val w = Window.partitionBy($"event_type").orderBy($"h_us")
-    def dsum(c: Column) = sum(c.cast(DecimalType(28, 12))).cast("double")
     val dev = grid.join(broadcast(mu), "event_type")
       .select($"event_type", $"h_us", $"nh",
         ($"n".cast("double") - $"mu").as("d"))
@@ -786,9 +783,9 @@ object WindowQueries {
       .withColumn("d12", lag($"d", 12).over(w))
       .withColumn("d24", lag($"d", 24).over(w))
     dev.groupBy($"event_type")
-      .agg(max($"nh").as("nh"), dsum($"d" * $"d").as("den"),
-        dsum($"d" * $"d1").as("n1"), dsum($"d" * $"d6").as("n6"),
-        dsum($"d" * $"d12").as("n12"), dsum($"d" * $"d24").as("n24"))
+      .agg(max($"nh").as("nh"), Exact.sum($"d" * $"d").as("den"),
+        Exact.sum($"d" * $"d1").as("n1"), Exact.sum($"d" * $"d6").as("n6"),
+        Exact.sum($"d" * $"d12").as("n12"), Exact.sum($"d" * $"d24").as("n24"))
       .select($"event_type", $"nh", $"den",
         expr("stack(4, 1, n1, 6, n6, 12, n12, 24, n24) AS (lag, num)"))
       .select($"event_type", $"lag".cast("long").as("lag"),
@@ -799,7 +796,7 @@ object WindowQueries {
   }
 
   val stAcfSql: String =
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT event_type, epoch_us(date_trunc('hour', ts)) AS h_us,
       |    COUNT(*) AS n
       |  FROM events GROUP BY 1, 2),
@@ -826,11 +823,11 @@ object WindowQueries {
       |  WINDOW w AS (PARTITION BY event_type ORDER BY h_us)),
       |a AS (
       |  SELECT event_type, MAX(nh) AS nh,
-      |    CAST(SUM(CAST(d * d AS DECIMAL(28,12))) AS DOUBLE) AS den,
-      |    CAST(SUM(CAST(d * d1 AS DECIMAL(28,12))) AS DOUBLE) AS n1,
-      |    CAST(SUM(CAST(d * d6 AS DECIMAL(28,12))) AS DOUBLE) AS n6,
-      |    CAST(SUM(CAST(d * d12 AS DECIMAL(28,12))) AS DOUBLE) AS n12,
-      |    CAST(SUM(CAST(d * d24 AS DECIMAL(28,12))) AS DOUBLE) AS n24
+      |    ${Exact.sumSql("d * d")} AS den,
+      |    ${Exact.sumSql("d * d1")} AS n1,
+      |    ${Exact.sumSql("d * d6")} AS n6,
+      |    ${Exact.sumSql("d * d12")} AS n12,
+      |    ${Exact.sumSql("d * d24")} AS n24
       |  FROM dv GROUP BY 1)
       |SELECT a.event_type, CAST(l.lag AS BIGINT) AS lag,
       |  CAST(a.nh - l.lag AS BIGINT) AS n_pairs,
@@ -1019,27 +1016,24 @@ object WindowQueries {
   def stCusumDrift(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.DecimalType
     val daily = Tables.materialize(Tables.events(spark, dir)
       .select(floor(unix_micros($"ts") / lit(86400000000L)).as("d"),
         $"value")
       .groupBy($"d")
       .agg(count(lit(1)).as("n_events"),
-        (sum($"value".cast(DecimalType(28, 12))).cast("double")
+        (Exact.sum($"value")
           / count(lit(1))).as("m")))
     val g = broadcast(daily.agg(
       count(lit(1)).as("nd"),
-      sum($"m".cast(DecimalType(28, 12))).cast("double").as("sm"),
-      sum(($"m" * $"m").cast(DecimalType(28, 12))).cast("double").as("smm")))
+      Exact.sum($"m").as("sm"),
+      Exact.sum($"m" * $"m").as("smm")))
     val w = Window.orderBy($"d")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily.crossJoin(g)
       .withColumn("gm", $"sm" / $"nd")
       .withColumn("sd", sqrt(($"nd".cast("double") * $"smm"
         - $"sm" * $"sm") / ($"nd".cast("double") * $"nd".cast("double"))))
-      .withColumn("cusum",
-        sum(($"m" - $"gm").cast(DecimalType(28, 12))).over(w)
-          .cast("double"))
+      .withColumn("cusum", Exact.sumOver($"m" - $"gm", w))
       .select(($"d" * 86400000000L).as("w_start_us"), $"n_events",
         round($"m", 6).as("daily_mean"), round($"cusum", 6).as("cusum"),
         when(abs($"cusum") > lit(2.0) * $"sd", 1L).otherwise(0L)
@@ -1048,24 +1042,23 @@ object WindowQueries {
   }
 
   val stCusumDriftSql: String =
-    """WITH daily AS MATERIALIZED (
+    s"""WITH daily AS MATERIALIZED (
       |  SELECT FLOOR(epoch_us(ts) / 86400000000) AS d,
       |    COUNT(*) AS n_events,
-      |    CAST(SUM(CAST(value AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*)
+      |    ${Exact.sumSql("value")} / COUNT(*)
       |      AS m
       |  FROM events GROUP BY 1),
       |g AS (
       |  SELECT COUNT(*) AS nd,
-      |    CAST(SUM(CAST(m AS DECIMAL(28,12))) AS DOUBLE) AS sm,
-      |    CAST(SUM(CAST(m * m AS DECIMAL(28,12))) AS DOUBLE) AS smm
+      |    ${Exact.sumSql("m")} AS sm,
+      |    ${Exact.sumSql("m * m")} AS smm
       |  FROM daily),
       |tr AS (
       |  SELECT d, n_events, m,
       |    sm / nd AS gm,
       |    SQRT((CAST(nd AS DOUBLE) * smm - sm * sm)
       |      / (CAST(nd AS DOUBLE) * CAST(nd AS DOUBLE))) AS sd,
-      |    CAST(SUM(CAST(m - sm / nd AS DECIMAL(28,12))) OVER (ORDER BY d
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
+      |    ${Exact.sumOverSql("m - sm / nd", "(ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")}
       |      AS cusum
       |  FROM daily CROSS JOIN g)
       |SELECT CAST(d * 86400000000 AS BIGINT) AS w_start_us, n_events,

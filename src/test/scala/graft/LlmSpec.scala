@@ -1231,6 +1231,47 @@ class LlmSpec extends SparkSpec {
       "segment values must reconcile with the corpus total")
   }
 
+  test("knn join probe budget binds on a dense 3x3 neighborhood, in Scala and the oracle") {
+    // 9 cells of 460 vectors around cell (0,0): every cell stays under
+    // KnnCellCap, but home cell (0,0) serves 9 x 460 = 4140 candidates,
+    // over KnnProbeBudget, while each edge home serves at most 6 x 460.
+    // A far cell (10,10) of 50 vectors is under both bounds.
+    val perCell = 460
+    assert(perCell <= Similarity.KnnCellCap)
+    assert(9 * perCell > Similarity.KnnProbeBudget && 6 * perCell <= Similarity.KnnProbeBudget)
+    val rnd = new scala.util.Random(7)
+    def vec(cx: Int, cy: Int): Array[Float] = Array(
+      ((cx + 0.1 + 0.8 * rnd.nextDouble()) / 4).toFloat,
+      ((cy + 0.1 + 0.8 * rnd.nextDouble()) / 4).toFloat,
+      rnd.nextFloat() * 2 - 1, rnd.nextFloat() * 2 - 1)
+    val cells = (for { cx <- -1 to 1; cy <- -1 to 1 } yield (cx, cy, perCell)) :+ ((10, 10, 50))
+    val rows = cells.flatMap { case (cx, cy, n) => Seq.fill(n)((cx, cy)) }.zipWithIndex
+      .map { case ((cx, cy), i) => (i.toLong, cx, cy, vec(cx, cy)) }
+    def queriesIn(cx: Int, cy: Int): Set[Long] =
+      rows.collect { case (id, `cx`, `cy`, _) if id % 10 == 0 => id }.toSet
+    val tmp = java.nio.file.Files.createTempDirectory("graft_knn_budget").toString
+    rows.map { case (id, _, _, v) => (id, v, (id % 3).toInt) }
+      .toDF("vec_id", "embedding", "label").write.parquet(s"$tmp/embeddings.parquet")
+    val got = Similarity.ssKnnJoin(spark, tmp).collect().toSeq
+    // The oracle in Spark's dialect: 1-based list indexing, unnest,
+    // list_dot_product and the DuckDB type names rewritten.
+    spark.read.parquet(s"$tmp/embeddings.parquet").createOrReplaceTempView("knn_budget_emb")
+    val sparkSql = Similarity.ssKnnJoinSql
+      .replace("FROM embeddings", "FROM knn_budget_emb")
+      .replace("embedding::DOUBLE[]", "CAST(embedding AS ARRAY<DOUBLE>)")
+      .replace("list_dot_product(", "vec_dot(")
+      .replace("v[1]", "element_at(v, 1)").replace("v[2]", "element_at(v, 2)")
+      .replace("unnest([-1, 0, 1])", "explode(array(-1, 0, 1))")
+      .replace("AS VARCHAR)", "AS STRING)")
+    val oracle = spark.sql(sparkSql).collect().toSeq
+    assert(got.map(_.toSeq) == oracle.map(_.toSeq), "ssKnnJoin and its oracle disagree")
+    val qIds = got.map(_.getLong(0)).toSet
+    assert(queriesIn(0, 0).nonEmpty && queriesIn(0, 0).intersect(qIds).isEmpty,
+      "the over-budget home cell's queries must return no rows")
+    assert(queriesIn(10, 10).nonEmpty && queriesIn(10, 10).subsetOf(qIds),
+      "the far, under-budget cell's queries must still return rows")
+  }
+
   test("js drift: bounded by ln 2, token totals reconcile") {
     val rows = TextAnalysis.taJsDrift(spark, sf0001)
       .select("source", "n_tokens", "js_div")

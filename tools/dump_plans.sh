@@ -13,10 +13,8 @@ QUERIES=${4:?comma-separated query names}
 SF=${5:-/root/testdata/sf0.1}
 cd "$REPO"
 mkdir -p "$OUT"
-CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-OPENS=$(grep -o '\-\-add-opens=[^ ]*' tools/verify.sh | tr '\n' ' ')
-EXPLAIN=1 java $OPENS -Xmx16g -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC -cp "$CP" \
+. tools/launch.sh
+EXPLAIN=1 graft_java -Xmx16g \
   graft.Profile "$SF" 1 "$QUERIES" 2>/dev/null > "$OUT/_combined_$SUFFIX.txt"
 python3 - "$OUT" "$SUFFIX" "$QUERIES" <<'EOF'
 import re, sys, os

@@ -8,11 +8,9 @@ SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/root/repo/target/verify_out_$$}
 trap '[ -z "${2:-}" ] && rm -rf "$OUT"' EXIT
 sbt -batch compile -warn
-CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
+. tools/launch.sh
 rm -rf "$OUT"
-java $OPENS -Xmx8g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" graft.Verify "$SF" "$OUT" 2>&1 | grep -v "^[0-9/: ]*WARN" || true
+graft_java -Xmx8g graft.Verify "$SF" "$OUT" 2>&1 | grep -v "^[0-9/: ]*WARN" || true
 # SURVEY §2.8's declared registry count must match the live registry —
 # the r9 drift lesson: an op that exists but isn't declared is invisible
 # coverage. Skipped under SPARK_GRAFT_ONLY (partial runs).
